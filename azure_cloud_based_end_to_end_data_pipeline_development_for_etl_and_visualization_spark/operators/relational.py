@@ -677,8 +677,10 @@ def pareto_frontier_2d(
 def high_water_mark(existing: DataFrame | None, key_col: str) -> int:
     """Scalar max-key fetch (ref gold_dim_branch.ipynb:60154-60162 cell 24).
 
-    The only driver-side collect in the pipeline — a single scalar, which is
-    acceptable at any scale (the reference does the same via .collect()[0][0])."""
+    A single scalar, acceptable at any scale (the reference does the same
+    via .collect()[0][0]). It costs a job over the whole dim; the medallion
+    pipeline's driver-side batch path reads the mark from the dim's commit
+    record instead (plans/versioned)."""
     if existing is None:
         return 0
     row = existing.agg(F.max(F.col(key_col))).first()

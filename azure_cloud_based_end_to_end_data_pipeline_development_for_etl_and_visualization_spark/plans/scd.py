@@ -48,6 +48,14 @@ class DuplicateMergeKeyError(ValueError):
     """Mirror of Delta's 'multiple source rows matched' merge error."""
 
 
+def duplicate_key_error(keys: Sequence[str], row: dict) -> DuplicateMergeKeyError:
+    """The error for a merge source with ``row["n"]`` rows on one key
+    (``row`` names the key's values and ``n``)."""
+    return DuplicateMergeKeyError(
+        f"source has multiple rows for merge key {keys}: {row}"
+    )
+
+
 def _check_unique_source_keys(source: DataFrame, keys: Sequence[str]) -> None:
     dup = (
         source.groupBy(*keys)
@@ -57,9 +65,7 @@ def _check_unique_source_keys(source: DataFrame, keys: Sequence[str]) -> None:
         .collect()
     )
     if dup:
-        raise DuplicateMergeKeyError(
-            f"source has multiple rows for merge key {keys}: {dup[0].asDict()}"
-        )
+        raise duplicate_key_error(keys, dup[0].asDict())
 
 
 def merge_scd1_df(

@@ -17,11 +17,16 @@ Dimension build stages (ref gold_dim_branch.ipynb cells 7-31):
 
 The result feeds :func:`...plans.scd.merge_scd1_df` keyed on the surrogate
 key, exactly like the reference's merge (cell 35).
+
+:func:`resolve_dim_batch` runs the same stages on the driver, for a batch
+small enough to hold there: with Spark each stage is a job (the distinct,
+the sink join and the two-phase rank are shuffles), which for a 200-row
+batch costs far more than the rows do.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -69,6 +74,60 @@ def build_dim(
     hwm = R.high_water_mark(existing, key_col)
     new_keyed = R.with_surrogate_key(new, list(business_keys), key_col, start_at=hwm + 1)
     return R.union_all(old.select(key_col, *cols), new_keyed.select(key_col, *cols))
+
+
+_NAN = object()
+
+
+def join_key(values: Sequence) -> tuple:
+    """``values`` as Spark compares grouping and join keys: NaN equals NaN
+    and -0.0 equals 0.0 (Python's float equality has neither)."""
+    return tuple(
+        _NAN if v != v else v + 0.0 if isinstance(v, float) else v for v in values
+    )
+
+
+def _order_key(values: Sequence) -> tuple:
+    """Spark's ascending order of a business-key tuple: NULLs first, NaN
+    above every other float."""
+    return tuple((0, 0) if v is None else (2, 0) if v != v else (1, v) for v in values)
+
+
+def resolve_dim_batch(
+    rows: Sequence[tuple],
+    n_keys: int,
+    existing: Iterable[tuple[int, tuple]],
+    hwm: int,
+) -> list[tuple[int, int]]:
+    """:func:`build_dim` on the driver, for a batch held there.
+
+    ``rows`` are the batch's ``(*business_keys, *attrs)`` tuples (the first
+    ``n_keys`` values are the business key); ``existing`` pairs each
+    existing dim row whose business key occurs in the batch with that key,
+    as ``(surrogate key, business-key tuple)``; ``hwm`` is the existing
+    dim's highest surrogate key. Returns the next dim state as ``(row
+    index, surrogate key)`` pairs — one per distinct row and existing dim
+    row it matches, then one per distinct unmatched row, keyed ``hwm+1..``
+    in business-key order: the rows and keys :func:`build_dim` gives, with
+    the same NULL semantics (a NULL business key never matches, so it is
+    new), and without a Spark job."""
+    keys_of: dict[tuple, list[int]] = {}
+    for key, bk in existing:
+        keys_of.setdefault(join_key(bk), []).append(key)
+    first: dict[tuple, int] = {}
+    for i, row in enumerate(rows):
+        first.setdefault(join_key(row), i)
+    out: list[tuple[int, int]] = []
+    new: list[int] = []
+    for i in first.values():
+        bk = rows[i][:n_keys]
+        keys = () if None in bk else keys_of.get(join_key(bk), ())
+        out.extend((i, k) for k in keys)
+        if not keys:
+            new.append(i)
+    new.sort(key=lambda i: _order_key(rows[i][:n_keys]))
+    out.extend((i, hwm + n) for n, i in enumerate(new, 1))
+    return out
 
 
 def build_fact(

@@ -20,6 +20,16 @@ manifest — the same protocol Delta/Iceberg implement with a log.
 
 Old versions stay readable (time travel) until ``vacuum`` removes them.
 
+Each snapshot carries a commit record, ``_commit.json`` inside the
+snapshot directory (Spark and parquet globs skip ``_``-prefixed files):
+the schema the committer wrote, the row count, and the maximum of every
+bigint column, the last two observed by the write job itself
+(``DataFrame.observe``) rather than by a second job. Readers use the
+recorded schema instead of inferring it, which would cost one Spark job
+per read; a snapshot without a record is read by inference. Surrogate-key high-water marks and the row counts a pipeline run
+reports come from the record too. ``vacuum`` removes the record with its
+snapshot.
+
 Scale: the pointer file is O(bytes) regardless of table size; snapshots
 are plain parquet directories, so every scan optimization (pruning,
 pushdown, partitioned layout) applies unchanged. Write amplification is
@@ -29,17 +39,21 @@ exactly the feature a real table format's log adds on top of this layout.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .scd import merge_scd1_df
 
 _VERSIONS = "_versions"
 _LATEST = "_latest"
+_RECORD = "_commit.json"
 
 
 def _versions_dir(root: str) -> str:
@@ -52,6 +66,10 @@ def _pointer_path(root: str) -> str:
 
 def _version_name(n: int) -> str:
     return f"v{n:08d}"
+
+
+def _snapshot_dir(root: str, n: int) -> str:
+    return os.path.join(_versions_dir(root), _version_name(n))
 
 
 def current_version(root: str) -> int | None:
@@ -78,17 +96,42 @@ def list_versions(root: str) -> list[int]:
 def commit_version(df: DataFrame, root: str, partition_by: Sequence[str] | None = None) -> int:
     """Write ``df`` as the table's next snapshot and atomically publish it.
 
+    The write job also observes the row count and every bigint column's
+    maximum; they go into the snapshot's commit record with the schema a
+    reader will see (partition columns last and every column nullable, as
+    a parquet scan lists them).
+
     Returns the committed version number. Concurrent committers race on
     the pointer flip; last publish wins (single-writer is the supported
     discipline, as with the reference's one-pipeline-per-table jobs)."""
     latest = current_version(root)
     existing = list_versions(root)
     nxt = max([latest or 0, *existing, 0]) + 1
-    snap = os.path.join(_versions_dir(root), _version_name(nxt))
-    writer = df.write.mode("overwrite")
+    snap = _snapshot_dir(root, nxt)
+    bigints = [f.name for f in df.schema.fields if isinstance(f.dataType, LongType)]
+    seen = Observation()
+    observed = df.observe(
+        seen,
+        F.count(F.lit(1)).alias("rows"),
+        *[F.max(F.col(f"`{c}`")).alias(f"max{i}") for i, c in enumerate(bigints)],
+    )
+    writer = observed.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(snap)
+    stats = seen.get
+    parts = list(partition_by or [])
+    fields = [f for f in df.schema.fields if f.name not in parts] + [df.schema[p] for p in parts]
+    schema = StructType([StructField(f.name, f.dataType, True, f.metadata) for f in fields])
+    record = {
+        "schema": schema.jsonValue(),
+        "rows": stats["rows"],
+        "max": {c: stats[f"max{i}"] for i, c in enumerate(bigints)},
+    }
+    # the snapshot stays invisible until the pointer flips, so the record
+    # needs no atomic write of its own
+    with open(os.path.join(snap, _RECORD), "w", encoding="utf-8") as f:
+        json.dump(record, f)
     # publish: single atomic rename of the pointer file
     tmp = _pointer_path(root) + f".__tmp_{uuid.uuid4().hex}"
     with open(tmp, "w", encoding="ascii") as f:
@@ -97,17 +140,38 @@ def commit_version(df: DataFrame, root: str, partition_by: Sequence[str] | None 
     return nxt
 
 
+def commit_record(root: str, version: int | None = None) -> dict | None:
+    """The commit record of ``version`` (default: the current one):
+    ``schema`` (JSON), ``rows`` and ``max`` (bigint column -> maximum, None
+    for an empty table). None when there is no such version or it was
+    written without a record."""
+    v = version if version is not None else current_version(root)
+    if v is None:
+        return None
+    try:
+        with open(os.path.join(_snapshot_dir(root, v), _RECORD), encoding="utf-8") as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
 def read_version(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
-    """Read the table — latest committed snapshot, or ``version`` as-of."""
+    """Read the table — latest committed snapshot, or ``version`` as-of.
+    The schema comes from the snapshot's commit record when it has one, so
+    the read launches no schema-inference job."""
     v = version if version is not None else current_version(root)
     if v is None:
         raise FileNotFoundError(f"no committed version at {root}")
-    snap = os.path.join(_versions_dir(root), _version_name(v))
+    snap = _snapshot_dir(root, v)
     if not os.path.isdir(snap):
         raise FileNotFoundError(f"version {v} not retained at {root} (vacuumed?)")
-    return spark.read.parquet(snap)
+    record = commit_record(root, v)
+    reader = spark.read
+    if record is not None:
+        reader = reader.schema(StructType.fromJson(record["schema"]))
+    return reader.parquet(snap)
 
 
 def merge_scd1_versioned(
@@ -166,7 +230,7 @@ def vacuum(root: str, keep_last: int = 1) -> list[int]:
     removed = []
     for v in versions:
         if v not in keep:
-            vdir = os.path.join(_versions_dir(root), _version_name(v))
+            vdir = _snapshot_dir(root, v)
             shutil.rmtree(vdir, ignore_errors=True)
             removed.append(v)
             # out-of-band delete: a session that time-traveled to this

@@ -19,6 +19,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap sized to the host: a quarter of physical RAM, at least
+    1g and at most 4g. A heap larger than the host can back lets a
+    long-lived session grow until the kernel kills the JVM; a local-mode
+    driver is also the only executor, so a quarter leaves the rest to
+    Python workers, the page cache and other sessions."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(4, int(ram_gb // 4)))}g"
+
+
 def get_spark(
     app_name: str = "pipeline_engine",
     master: str | None = None,
@@ -28,7 +38,9 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     Env overrides: ``SPARK_GRAFT_CPUS`` sets local parallelism,
-    ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` the shuffle width.
+    ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` the shuffle width,
+    ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default
+    :func:`default_driver_memory`).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -53,7 +65,10 @@ def get_spark(
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -2,8 +2,8 @@
 
 The last hand-audited scale contract, mechanized (r10 VERDICT next-round
 #2): tools/collect_audit.py walks the package AST and fails on any
-``.collect()``/``.toPandas()``/``.toLocalIterator()`` site outside the
-reviewed registry of bounded sites. The sweep keeps the package clean;
+``.collect()``/``.toPandas()``/``.toArrow()``/``.toLocalIterator()`` site
+outside the reviewed registry of bounded sites. The sweep keeps the package clean;
 the canaries prove the audit can actually fail (a sweep that cannot fail
 is not a gate) — both for an UNREGISTERED site and for a registered
 function that silently GREW a second site.
@@ -64,6 +64,16 @@ def test_canary_topandas_and_iterator_detected(tmp_path):
     )
     sites = find_sites(str(tmp_path))
     assert {s[1] for s in sites} == {"f", "g"}
+
+
+def test_canary_toarrow_detected(tmp_path):
+    """Arrow collection materializes on the driver like collect()."""
+    (tmp_path / "rogue3.py").write_text(
+        "def h(df):\n"
+        "    return df.toArrow()\n"
+    )
+    violations, _ = audit(str(tmp_path))
+    assert len(violations) == 1 and "`h`" in violations[0]
 
 
 def test_docstring_mentions_do_not_count(tmp_path):

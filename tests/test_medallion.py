@@ -5,15 +5,23 @@ driven from CSV files exactly like the reference's ADF flow."""
 from __future__ import annotations
 
 import random
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans import (
+    medallion,
+)
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.medallion import (
     CARSALES,
     gold_data_dir,
     gold_table,
+    register_gold,
     run_pipeline,
+)
+from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.scd import (
+    DuplicateMergeKeyError,
 )
 
 HEADER = (
@@ -235,10 +243,6 @@ def test_register_gold_exposes_sql_namespace(spark, tmp_path, lake):
     <db>.<table> (the reference's cars_catalog.gold.* shape), and
     re-running pipeline + registration re-points tables at the newest
     snapshot."""
-    from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.medallion import (
-        register_gold,
-    )
-
     db = "gold_t"
     csv = tmp_path / "batch.csv"
     rows0 = make_batch0(40)
@@ -258,3 +262,77 @@ def test_register_gold_exposes_sql_namespace(spark, tmp_path, lake):
         assert dealers1 == dealers0 + 1
     finally:
         spark.sql(f"drop database if exists {db} cascade")
+
+
+#: the whole star for one small incremental batch, registration included
+BATCH_JOB_BUDGET = 40
+
+
+def test_incremental_batch_job_budget(spark, tmp_path, lake):
+    """An incremental batch plus its registration launches at most
+    BATCH_JOB_BUDGET Spark jobs: the batch is resolved once on the driver,
+    reads take the committed schema, and counts, high-water marks and
+    catalog entries come from the commits, not from new jobs."""
+    db = "gold_budget"
+    csv = tmp_path / "batch.csv"
+    rows0 = make_batch0()
+    write_csv(csv, rows0)
+    run_pipeline(spark, str(csv), lake)
+    sc = spark.sparkContext
+    group = f"batch-budget-{uuid.uuid4().hex}"
+    try:
+        register_gold(spark, lake, database=db)
+        write_csv(csv, make_batch1(rows0))
+        sc.setJobGroup(group, "one incremental batch")
+        try:
+            counts = run_pipeline(spark, str(csv), lake)
+            register_gold(spark, lake, database=db)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n = spark.sql(f"select count(*) n from {db}.dim_dealer").collect()[0]["n"]
+    finally:
+        spark.sql(f"drop database if exists {db} cascade")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= BATCH_JOB_BUDGET, f"{len(jobs)} jobs"
+    assert counts["dim_dealer"] == n
+
+
+def _scenario(spark, tmp_path, lake):
+    """The three-batch scenario, then a batch that gives one dealer two
+    names (rejected); returns every gold table's rows."""
+    tmp_path.mkdir(exist_ok=True)
+    csv = tmp_path / "scenario.csv"
+    rows0 = make_batch0()
+    batch1 = make_batch1(rows0)
+    for rows in (rows0, batch1, make_batch2(batch1)):
+        write_csv(csv, rows)
+        run_pipeline(spark, str(csv), lake)
+    clash = [rows0[0], (*rows0[0][:10], "Other Name", rows0[0][11])]
+    write_csv(csv, clash)
+    with pytest.raises(DuplicateMergeKeyError, match="dim_dealer_key"):
+        run_pipeline(spark, str(csv), lake)
+    tables = [spec.name for spec in CARSALES.dims] + [CARSALES.fact_name]
+    return {
+        t: sorted(map(tuple, gold_table(spark, lake, t).collect()), key=repr)
+        for t in tables
+    }
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_batches_release_what_they_cache(spark, tmp_path, lake, monkeypatch, path):
+    """No batch leaves a persisted RDD behind, on either resolution path,
+    including a batch rejected with DuplicateMergeKeyError."""
+    if path == "spark":
+        monkeypatch.setattr(medallion, "DRIVER_BATCH_ROWS", 0)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    _scenario(spark, tmp_path, lake)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_driver_and_spark_paths_build_the_same_gold(spark, tmp_path, monkeypatch):
+    """A batch resolved on the driver and the same batch resolved in
+    Spark give identical gold tables: keys, attributes and fact rows."""
+    driver = _scenario(spark, tmp_path / "d", str(tmp_path / "d" / "lake"))
+    monkeypatch.setattr(medallion, "DRIVER_BATCH_ROWS", 0)
+    in_spark = _scenario(spark, tmp_path / "s", str(tmp_path / "s" / "lake"))
+    assert driver == in_spark

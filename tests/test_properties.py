@@ -105,6 +105,39 @@ def test_build_dim_preserves_existing_keys(spark, initial, extra):
 
 @prop
 @given(
+    initial=st.dictionaries(KEYS, VALS, min_size=1, max_size=10),
+    extra=st.dictionaries(st.none() | KEYS, VALS, max_size=10),
+    repeats=st.integers(1, 3),
+)
+def test_resolve_dim_batch_matches_build_dim(spark, initial, extra, repeats):
+    """The driver-side dim resolution gives build_dim's rows and keys:
+    existing business keys keep theirs, new ones (a NULL key included)
+    get hwm+1.. in business-key order, repeated rows count once."""
+    from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.star import (
+        build_dim,
+        resolve_dim_batch,
+    )
+
+    dim0 = build_dim(
+        spark.createDataFrame(sorted(initial.items()), "bk long, attr string"),
+        ["bk"], ["attr"], "sk",
+    )
+    existing = [(r["sk"], (r["bk"],)) for r in dim0.collect()]
+    batch = sorted(extra.items(), key=repr) * repeats
+    want = build_dim(
+        spark.createDataFrame(batch, "bk long, attr string"), ["bk"], ["attr"], "sk",
+        existing=dim0,
+    )
+    hwm = max(k for k, _ in existing)
+    found = [(k, bk) for k, bk in existing if bk[0] in extra]
+    got = resolve_dim_batch(batch, 1, found, hwm)
+    assert sorted((k, *batch[i]) for i, k in got) == sorted(
+        (r["sk"], r["bk"], r["attr"]) for r in want.collect()
+    )
+
+
+@prop
+@given(
     keys=st.sets(KEYS, min_size=1, max_size=15),
     start=st.integers(1, 100),
     n_parts=st.integers(1, 5),

@@ -8,6 +8,7 @@ import os
 import pytest
 
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.versioned import (
+    commit_record,
     commit_version,
     current_version,
     list_versions,
@@ -104,3 +105,55 @@ def test_retention_delete_is_versioned_and_exact(spark, tmp_path):
     removed = vacuum(root, keep_last=1)
     assert removed == [v1]
     assert read_version(spark, root).count() == 30
+
+
+def _record_path(root, v):
+    return os.path.join(root, "_versions", f"v{v:08d}", "_commit.json")
+
+
+def test_commit_record_holds_schema_and_observed_stats(spark, root):
+    """The commit record carries what the write job saw: the reader's
+    schema (partition columns last), the row count and each bigint
+    column's maximum. A read through it launches no Spark job and sees
+    exactly the schema inference would give."""
+    df = spark.createDataFrame(
+        [(1, "a", 2019), (7, "b", 2020), (3, "c", 2020)], "k long, v string, yr int"
+    )
+    commit_version(df, root, partition_by=["yr"])
+    rec = commit_record(root)
+    assert rec["rows"] == 3 and rec["max"] == {"k": 7}
+    assert [f["name"] for f in rec["schema"]["fields"]] == ["k", "v", "yr"]
+
+    sc = spark.sparkContext
+    group = "read-version-jobs"
+    sc.setJobGroup(group, "read through the commit record")
+    try:
+        got = read_version(spark, root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    snap = os.path.join(root, "_versions", "v00000001")
+    assert got.schema == spark.read.parquet(snap).schema
+    assert sorted(map(tuple, got.collect())) == [(1, "a", 2019), (3, "c", 2020), (7, "b", 2020)]
+
+
+def test_snapshot_without_commit_record_reads_and_vacuums(spark, root):
+    """Snapshots written before commit records existed still read (schema
+    inferred); time travel returns each version's own schema; vacuum
+    removes a record with its snapshot."""
+    commit_version(_df(spark, [(1, "a")]), root)
+    commit_version(
+        spark.createDataFrame([(2, "b", 0.5)], "k long, v string, w double"), root
+    )
+    os.remove(_record_path(root, 2))  # a snapshot from before the records
+    assert commit_record(root) is None
+    assert read_version(spark, root).columns == ["k", "v", "w"]
+    assert [tuple(r) for r in read_version(spark, root).collect()] == [(2, "b", 0.5)]
+    assert read_version(spark, root, version=1).columns == ["k", "v"]
+    assert commit_record(root, 1)["max"] == {"k": 1}
+
+    commit_version(_df(spark, [(3, "c")]), root)
+    assert vacuum(root, keep_last=1) == [1, 2]
+    assert not os.path.exists(_record_path(root, 1))
+    assert os.path.exists(_record_path(root, 3))
+    assert commit_record(root, 1) is None

@@ -1,7 +1,7 @@
 """Package-wide driver-materialization audit: every ``.collect()`` /
-``.toPandas()`` / ``.toLocalIterator()`` call site in the engine package
-must be REGISTERED with a one-line justification of why its result is
-bounded (independent of fact-table size).
+``.toPandas()`` / ``.toArrow()`` / ``.toLocalIterator()`` call site in the
+engine package must be REGISTERED with a one-line justification of why its
+result is bounded (independent of fact-table size).
 
 This mechanizes the last hand-audited scale contract (r10 VERDICT
 next-round #2 — the same move that mechanized the broadcast-hint and
@@ -28,7 +28,9 @@ Every registered site's bound, by class:
 - **query-batch**: the PQ/IVFPQ/MIPS lookup-table builds — bounded by
   ``max_query_batch`` (default 8192) enforced by
   ``_require_bounded_queries`` BEFORE the collect runs;
-- **domain-bounded**: histograms over value domains (price cents).
+- **domain-bounded**: histograms over value domains (price cents);
+- **batch-bounded**: an incremental batch held on the driver, capped by
+  ``plans.medallion.DRIVER_BATCH_ROWS`` before the rest of it is fetched.
 
 Usage (also wired into tests/test_collect_audit.py as the sweep)::
 
@@ -48,7 +50,7 @@ PKG_NAME = (
 )
 
 DRIVER_MATERIALIZE_ATTRS = frozenset(
-    {"collect", "toPandas", "toLocalIterator"}
+    {"collect", "toPandas", "toArrow", "toLocalIterator"}
 )
 
 # (relpath within the package, enclosing function path) ->
@@ -88,6 +90,21 @@ REGISTRY: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/graph.py", "pagerank"): (
         1,
         "scalar: 1-row dangling-mass sum per iteration",
+    ),
+    ("operators/graph.py", "pagerank_int"): (
+        1,
+        "scalar: 1-row (node count, dangling count) aggregate validating "
+        "the graph before the integer iterations",
+    ),
+    ("plans/medallion.py", "_batch_on_driver"): (
+        1,
+        "batch-bounded: silver under limit(DRIVER_BATCH_ROWS + 1); a "
+        "larger batch is dropped and resolved in Spark instead",
+    ),
+    ("plans/medallion.py", "_merge_dim_on_driver"): (
+        1,
+        "batch-bounded: the existing dim rows whose business keys occur in "
+        "a driver-held batch (a semi join against the batch's keys)",
     ),
     ("operators/similarity.py", "kmeans_centroids"): (
         2,
