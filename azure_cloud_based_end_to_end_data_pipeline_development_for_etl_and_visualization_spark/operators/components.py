@@ -107,7 +107,10 @@ def connected_components(
     # checkpoint copies the (node, component) pairs out of the cache in
     # one narrow job (the frame is already materialized by the last
     # convergence count), truncates the iterative lineage, and lets the
-    # cache entry drop here.
+    # cache entry drop here. A local checkpoint lives in executor block
+    # storage with no lineage behind it: losing an executor loses the
+    # labels it held, and a later read of them fails instead of
+    # recomputing.
     labels = labels.localCheckpoint(eager=True)
     cached.unpersist()
     return labels

@@ -34,32 +34,6 @@ from ..functions import vectors as V
 # across query splits) or override explicitly.
 DEFAULT_MAX_QUERY_BATCH = 8192
 
-# Hot-cell split width for the IVF index writes (r15): with a width
-# w > 1 the partitioned write repartitions by
-# (cell, pmod(xxhash64(id), w)) so a skewed k-means cell spreads across
-# up to w write tasks instead of straggling on one, while the
-# per-generation file count stays bounded at n_cells x w. Deterministic
-# id hash, never rand() (guide §2.5 — retried tasks must reproduce the
-# same row->partition assignment). The LOCAL default is 1 (= the r14
-# one-task-per-cell layout): measured at the bench crossover geometry
-# (160k vectors, 64 cells, local[32]) w=4 LOSES — append 0.80x, index
-# re-scan 0.82x, ~3x the files — because local file-open overhead
-# outweighs a straggler that never materializes on an in-memory
-# "cluster". On a real cluster a hot cell serializes the whole write
-# on one task, which is where w=4 earns its extra files; set
-# SPARK_GRAFT_IVF_WRITE_SPLIT (or pass write_split) on that tier.
-import os as _os
-
-_IVF_WRITE_SPLIT = int(_os.environ.get("SPARK_GRAFT_IVF_WRITE_SPLIT", "1"))
-
-
-def _cell_write_partitioning(id_col: str, write_split: int | None):
-    """Repartition columns for the cell-partitioned index writes."""
-    w = _IVF_WRITE_SPLIT if write_split is None else int(write_split)
-    if w <= 1:
-        return [F.col("cell")]
-    return [F.col("cell"), F.pmod(F.xxhash64(F.col(id_col)), F.lit(w))]
-
 
 def _require_bounded_queries(
     queries: DataFrame,
@@ -376,7 +350,6 @@ def build_ivf_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    write_split: int | None = None,
 ) -> DataFrame:
     """Materialize the IVF index: one map-only corpus pass assigns each
     vector its nearest cell (argmax centroid dot — plan-literal JVM
@@ -399,13 +372,8 @@ def build_ivf_index(
     # n_cells x n_partitions files per generation — and both the write
     # and every later index scan pay per-file overheads (measured at a
     # 160k/64-cell corpus: build 8.9 s -> 4.2 s, 2048 -> 64 files,
-    # index scan 1.0 s -> 0.1 s). ``write_split`` > 1 additionally
-    # splits a HOT cell across up to that many tasks (see
-    # _cell_write_partitioning — the cluster-tier straggler fix, off
-    # locally where it measured slower).
-    assigned.repartition(
-        *_cell_write_partitioning(id_col, write_split)
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
+    # index scan 1.0 s -> 0.1 s).
+    assigned.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(path)
     return corpus.sparkSession.read.parquet(path)
 
 
@@ -415,7 +383,6 @@ def append_ivf_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    write_split: int | None = None,
 ) -> DataFrame:
     """Incremental IVF index maintenance: assign ONLY the new batch to
     the EXISTING (persisted) centroids and APPEND its cell files under
@@ -444,14 +411,8 @@ def append_ivf_index(
     # hash-distribute before the partitioned append (build_ivf_index
     # rationale — appends fragment worst: ONE file per cell per batch
     # instead of one per input partition per cell; measured 4.6 s ->
-    # 1.3 s per append at the 160k/64-cell crossover corpus). Same
-    # optional hot-cell split sub-key as the build (r15): at most
-    # ``write_split`` files per cell per batch, and a skewed cell no
-    # longer serializes the append on one task (cluster tier only —
-    # see _cell_write_partitioning for the measured local trade).
-    assigned.repartition(
-        *_cell_write_partitioning(id_col, write_split)
-    ).write.mode("append").partitionBy("cell").parquet(path)
+    # 1.3 s per append at the 160k/64-cell crossover corpus).
+    assigned.repartition("cell").write.mode("append").partitionBy("cell").parquet(path)
     return new_batch.sparkSession.read.parquet(path)
 
 

@@ -8,11 +8,11 @@ rewrites a directory to approximately ``target_mb``-sized files.
 
 Implementation: size the directory, compute ``ceil(bytes / target)``,
 rewrite through ``repartition(n)`` (or ``repartitionByRange(n, sort_cols)``
-to also restore clustering for min/max row-group skipping), and swap via
-the same side-directory protocol as ``plans.scd.merge_scd1_path`` — or
-commit as a new snapshot on a ``plans.versioned`` table, which makes
-compaction a zero-risk background job: readers keep the old version until
-the atomic pointer flip.
+to also restore clustering for min/max row-group skipping), and swap the
+rewrite in through a dot-prefixed side directory (:func:`_swap_in`). On a
+``plans.versioned`` table, commit the rewrite as a new snapshot instead,
+which makes compaction a zero-risk background job: readers keep the old
+version until the atomic pointer flip.
 
 Scale: one full read + one full shuffle + one full write of the table —
 run it per-partition (pass the partition subdirectory) on hive-layout
@@ -27,7 +27,7 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrameWriter, SparkSession
 
 
 def dir_bytes(path: str) -> int:
@@ -74,6 +74,21 @@ def _side_dir(path: str, tag: str) -> str:
     return os.path.join(parent, f".{base}.{tag}_{uuid.uuid4().hex}")
 
 
+def _swap_in(spark: SparkSession, path: str, writer: DataFrameWriter, tag: str) -> int:
+    """Write through ``writer`` into a side directory, then swap it in for
+    ``path`` with two renames: readers see the old files until the first
+    rename, and ``path`` is missing between the two. Returns the new
+    data-file count."""
+    tmp = _side_dir(path, tag)
+    writer.parquet(tmp)
+    old = _side_dir(path, "__old")
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+    _invalidate_listing(spark, path)
+    return data_file_count(path)
+
+
 def compact_parquet_dir(
     spark: SparkSession,
     path: str,
@@ -93,14 +108,7 @@ def compact_parquet_dir(
         )
     else:
         out = df.repartition(n_files)
-    tmp = _side_dir(path, "__compact")
-    out.write.mode("overwrite").parquet(tmp)
-    old = _side_dir(path, "__old")
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    _invalidate_listing(spark, path)
-    return data_file_count(path)
+    return _swap_in(spark, path, out.write.mode("overwrite"), "__compact")
 
 
 def zorder_compact_dir(
@@ -181,11 +189,6 @@ def zorder_compact_dir(
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
     )
-    tmp = _side_dir(path, "__zcompact")
-    out.write.mode("overwrite").partitionBy(file_col).parquet(tmp)
-    old = _side_dir(path, "__old")
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    _invalidate_listing(spark, path)
-    return data_file_count(path)
+    return _swap_in(
+        spark, path, out.write.mode("overwrite").partitionBy(file_col), "__zcompact"
+    )

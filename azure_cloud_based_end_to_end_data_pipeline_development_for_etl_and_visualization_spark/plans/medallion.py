@@ -52,7 +52,7 @@ from pyspark.sql.types import (
 
 from ..operators import relational as R
 from ..sources.io import read_csv, write_parquet
-from .scd import duplicate_key_error, merge_scd1_path
+from .scd import duplicate_key_error
 from .star import build_dim, join_key, resolve_dim_batch
 from .versioned import (
     _snapshot_dir,
@@ -129,55 +129,19 @@ def _gold_path(lake_root: str, table: str) -> str:
     return os.path.join(lake_root, "gold", table)
 
 
-def _gold_exists(path: str, publish: str) -> bool:
-    if publish == "versioned":
-        return current_version(path) is not None
-    return os.path.exists(path)
+def gold_table(spark: SparkSession, lake_root: str, table: str) -> DataFrame:
+    """Read a gold table's current snapshot."""
+    return read_version(spark, _gold_path(lake_root, table))
 
 
-def _merge_gold(
-    spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    keys: list[str],
-    publish: str,
-    check_duplicate_source_keys: bool = True,
-    partition_by: list[str] | None = None,
-) -> None:
-    if publish == "versioned":
-        merge_scd1_versioned(
-            spark, path, df, keys,
-            check_duplicate_source_keys=check_duplicate_source_keys,
-            partition_by=partition_by,
-        )
-    else:
-        merge_scd1_path(
-            spark, path, df, keys,
-            check_duplicate_source_keys=check_duplicate_source_keys,
-            partition_by=partition_by,
-        )
-
-
-def gold_table(
-    spark: SparkSession, lake_root: str, table: str, publish: str = "versioned"
-) -> DataFrame:
-    """Read a gold table under either publish protocol."""
-    path = _gold_path(lake_root, table)
-    if publish == "versioned":
-        return read_version(spark, path)
-    return spark.read.parquet(path)
-
-
-def gold_data_dir(lake_root: str, table: str, publish: str = "versioned") -> str:
+def gold_data_dir(lake_root: str, table: str) -> str:
     """Physical directory of the current snapshot (for layout inspection —
-    hive partition dirs live here under both protocols)."""
+    hive partition dirs live here)."""
     path = _gold_path(lake_root, table)
-    if publish == "versioned":
-        v = current_version(path)
-        if v is None:
-            raise FileNotFoundError(f"no committed version at {path}")
-        return _snapshot_dir(path, v)
-    return path
+    v = current_version(path)
+    if v is None:
+        raise FileNotFoundError(f"no committed version at {path}")
+    return _snapshot_dir(path, v)
 
 
 def _batch_on_driver(silver: DataFrame, config: StarSchemaConfig) -> pa.Table | None:
@@ -202,13 +166,12 @@ def _build_gold_on_driver(
     config: StarSchemaConfig,
     schema: StructType,
     batch: pa.Table,
-    publish: str,
 ) -> None:
     """:func:`build_gold` for a batch held on the driver: each dim is
     resolved and committed by :func:`_merge_dim_on_driver`, then the fact
     rows are keyed from the resolved dim rows. Nothing is persisted."""
     keys_of = {
-        spec.name: _merge_dim_on_driver(spark, lake_root, spec, schema, batch, publish)
+        spec.name: _merge_dim_on_driver(spark, lake_root, spec, schema, batch)
         for spec in config.dims
     }
     row_bks = {spec.name: _rows(batch, spec.business_keys) for spec in config.dims}
@@ -232,7 +195,7 @@ def _build_gold_on_driver(
         [schema[c] for c in carried]
         + [StructField(spec.key_col, LongType()) for spec in config.dims]
     )
-    _merge_fact(spark, lake_root, config, _local_frame(spark, fact, fact_schema), publish)
+    _merge_fact(spark, lake_root, config, _local_frame(spark, fact, fact_schema))
 
 
 def _rows(table: pa.Table, cols: list[str]) -> list[tuple]:
@@ -246,7 +209,6 @@ def _merge_dim_on_driver(
     spec: DimSpec,
     schema: StructType,
     batch: pa.Table,
-    publish: str,
 ) -> dict[tuple, list[int]]:
     """Resolve one dim's next state for a driver-held batch and commit it.
     One job fetches the existing rows of the batch's business keys;
@@ -260,8 +222,8 @@ def _merge_dim_on_driver(
     rows = _rows(batch, cols)
     existing: list[tuple[int, tuple]] = []
     hwm = 0
-    if _gold_exists(path, publish):
-        target = gold_table(spark, lake_root, spec.name, publish)
+    if current_version(path) is not None:
+        target = read_version(spark, path)
         probe = spark.createDataFrame(
             batch.select(spec.business_keys),
             StructType([schema[c] for c in spec.business_keys]),
@@ -274,7 +236,7 @@ def _merge_dim_on_driver(
         existing = list(
             zip(found.column(spec.key_col).to_pylist(), _rows(found, spec.business_keys))
         )
-        record = _gold_record(lake_root, spec.name, publish)
+        record = commit_record(path)
         if record is not None and spec.key_col in record["max"]:
             hwm = record["max"][spec.key_col] or 0
         else:
@@ -288,9 +250,9 @@ def _merge_dim_on_driver(
     nxt_schema = StructType(
         [StructField(spec.key_col, LongType()), *(schema[c] for c in cols)]
     )
-    _merge_gold(
+    merge_scd1_versioned(
         spark, path, _local_frame(spark, nxt, nxt_schema), [spec.key_col],
-        publish, check_duplicate_source_keys=False,
+        check_duplicate_source_keys=False,
     )
     keys_of: dict[tuple, list[int]] = {}
     for i, k in resolved:
@@ -303,13 +265,6 @@ def _local_frame(spark: SparkSession, table: pa.Table, schema: StructType) -> Da
     a merge writes each source partition as its own file, so a per-core
     split would add that many files to every snapshot."""
     return spark.createDataFrame(table, schema).coalesce(1)
-
-
-def _gold_record(lake_root: str, table: str, publish: str) -> dict | None:
-    """The current snapshot's commit record (versioned publish only)."""
-    if publish != "versioned":
-        return None
-    return commit_record(_gold_path(lake_root, table))
 
 
 def _fact_carried(config: StarSchemaConfig) -> list[str]:
@@ -325,14 +280,12 @@ def _merge_fact(
     lake_root: str,
     config: StarSchemaConfig,
     fact: DataFrame,
-    publish: str,
 ) -> None:
-    _merge_gold(
+    merge_scd1_versioned(
         spark,
         _gold_path(lake_root, config.fact_name),
         fact,
         [spec.key_col for spec in config.dims],
-        publish,
         # the reference's fact grain allows duplicate key combos on initial
         # load (one row per silver row) — SURVEY.md 3.3 documents the
         # collision; we bypass the duplicate check to match its semantics
@@ -346,7 +299,6 @@ def build_gold(
     lake_root: str,
     config: StarSchemaConfig,
     silver: DataFrame | None = None,
-    publish: str = "versioned",
 ) -> None:
     """Build/merge every dim then the fact from the silver layer.
 
@@ -366,19 +318,15 @@ def build_gold(
     released before returning. Either way the fact joins the batch's
     resolved dim rows, never a re-read of the whole dim.
 
-    ``publish`` picks the commit protocol. The default ``"versioned"``
-    publishes each merge as an atomic pointer flip (plans/versioned):
+    Each merge is published as an atomic pointer flip (plans/versioned):
     readers always see a complete snapshot — there is NO window in which
     the table is absent — and every run is time-travelable, the portable
-    equivalent of the reference's Delta gold layer. ``"swap"`` is the
-    plain directory-rename publisher (plans/scd.merge_scd1_path): no
-    retained history, a two-rename window, but gold tables stay directly
-    parquet-addressable for external readers."""
+    equivalent of the reference's Delta gold layer."""
     if silver is None:
         silver = spark.read.parquet(os.path.join(lake_root, "silver", "carsales"))
     batch = _batch_on_driver(silver, config)
     if batch is not None:
-        _build_gold_on_driver(spark, lake_root, config, silver.schema, batch, publish)
+        _build_gold_on_driver(spark, lake_root, config, silver.schema, batch)
         return
 
     held: list[DataFrame] = []
@@ -394,9 +342,7 @@ def build_gold(
         for spec in config.dims:
             path = _gold_path(lake_root, spec.name)
             existing = (
-                gold_table(spark, lake_root, spec.name, publish)
-                if _gold_exists(path, publish)
-                else None
+                read_version(spark, path) if current_version(path) is not None else None
             )
             nxt = materialized(
                 build_dim(
@@ -405,7 +351,7 @@ def build_gold(
                 )
             )
             # the merge's duplicate-key check fills the cache
-            _merge_gold(spark, path, nxt, [spec.key_col], publish)
+            merge_scd1_versioned(spark, path, nxt, [spec.key_col])
             dim_frames[spec.name] = nxt
 
         fact_src = silver.alias("s")
@@ -422,7 +368,7 @@ def build_gold(
             # customer-scaled entity — unhinted, AQE broadcasts the small ones
             fact_src = fact_src.join(d, cond, "left")
             select_cols.append(F.col(f"{spec.name}.{spec.key_col}").alias(spec.key_col))
-        _merge_fact(spark, lake_root, config, fact_src.select(*select_cols), publish)
+        _merge_fact(spark, lake_root, config, fact_src.select(*select_cols))
     finally:
         for df in held:
             df.unpersist()
@@ -433,14 +379,13 @@ def register_gold(
     lake_root: str,
     config: StarSchemaConfig = CARSALES,
     database: str = "gold",
-    publish: str = "versioned",
 ) -> list[str]:
     """Register every gold table in the session catalog as
     ``<database>.<name>`` — the 2-level session-catalog equivalent of the
     reference's ``cars_catalog.gold.*`` Unity namespace
     (gold_dim_branch.ipynb:88171-88175: ``saveAsTable`` into the gold
-    schema). External-location tables over the CURRENT snapshot: with the
-    versioned publisher each call re-points the catalog entries at the
+    schema). External-location tables over the CURRENT snapshot: each
+    call re-points the catalog entries at the
     newest committed snapshot, so run-then-register mirrors the
     reference's per-run ``saveAsTable``. Returns the qualified names.
 
@@ -454,11 +399,11 @@ def register_gold(
     spark.sql(f"create database if not exists {database}")
     out = []
     for t in [spec.name for spec in config.dims] + [config.fact_name]:
-        path = gold_data_dir(lake_root, t, publish)
+        path = gold_data_dir(lake_root, t)
         qualified = f"{database}.{t}"
         if (
             spark.catalog.tableExists(qualified)
-            and spark.table(qualified).schema == _gold_schema(spark, lake_root, t, publish)
+            and spark.table(qualified).schema == _gold_schema(spark, lake_root, t)
         ):
             spark.sql(f"alter table {qualified} set location '{path}'")
         else:
@@ -468,14 +413,12 @@ def register_gold(
     return out
 
 
-def _gold_schema(
-    spark: SparkSession, lake_root: str, table: str, publish: str
-) -> StructType:
+def _gold_schema(spark: SparkSession, lake_root: str, table: str) -> StructType:
     """The current snapshot's schema: from its commit record, else read."""
-    record = _gold_record(lake_root, table, publish)
+    record = commit_record(_gold_path(lake_root, table))
     if record is not None:
         return StructType.fromJson(record["schema"])
-    return gold_table(spark, lake_root, table, publish).schema
+    return gold_table(spark, lake_root, table).schema
 
 
 def _create_table(spark: SparkSession, qualified: str, path: str) -> None:
@@ -494,12 +437,12 @@ def _create_table(spark: SparkSession, qualified: str, path: str) -> None:
             spark.conf.set(conf, before)
 
 
-def _row_count(spark: SparkSession, lake_root: str, table: str, publish: str) -> int:
+def _row_count(spark: SparkSession, lake_root: str, table: str) -> int:
     """A gold table's rows: from its commit record, else counted."""
-    record = _gold_record(lake_root, table, publish)
+    record = commit_record(_gold_path(lake_root, table))
     if record is not None:
         return record["rows"]
-    return gold_table(spark, lake_root, table, publish).count()
+    return gold_table(spark, lake_root, table).count()
 
 
 def run_pipeline(
@@ -514,11 +457,14 @@ def run_pipeline(
     existence, like the reference's tableExists probe — op 9). Returns
     per-table row counts for assertion/monitoring, taken from the commits'
     records (no counting job)."""
+    # single-value keyword, kept because perfbench's medallion_refresh passes it
+    if publish != "versioned":
+        raise ValueError(f"unknown publish protocol {publish!r}; only 'versioned' exists")
     ingest_to_bronze(
         spark, csv_path, lake_root,
         drop_cols if drop_cols is not None else ["Product_Name"],
     )
     silver = bronze_to_silver(spark, lake_root)
-    build_gold(spark, lake_root, config, silver=silver, publish=publish)
+    build_gold(spark, lake_root, config, silver=silver)
     tables = [spec.name for spec in config.dims] + [config.fact_name]
-    return {t: _row_count(spark, lake_root, t, publish) for t in tables}
+    return {t: _row_count(spark, lake_root, t) for t in tables}

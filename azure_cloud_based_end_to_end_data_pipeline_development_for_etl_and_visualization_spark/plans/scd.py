@@ -25,6 +25,9 @@ files):
   because silently picking one row would diverge from reference behavior
   (SURVEY.md 3.3 documents the fact-grain collision this can cause).
 
+The merge is a pure relation; :func:`..plans.versioned.merge_scd1_versioned`
+commits it as a table's next snapshot, the one way tables are published.
+
 Scale: the anti join shuffles on the merge keys; with a small source batch
 (the common incremental case) Catalyst/AQE broadcasts the source side, so
 the target is scanned once and never shuffled. The rewrite-the-table write
@@ -35,12 +38,9 @@ API here is the stable surface either way.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -82,50 +82,3 @@ def merge_scd1_df(
     survivors = target.join(source.select(*keys), list(keys), "left_anti")
     return source.unionByName(survivors)
 
-
-def merge_scd1_path(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    check_duplicate_source_keys: bool = True,
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """Merge into a parquet table at ``target_path`` via directory swap.
-
-    Local/HDFS: write the merged relation to a side directory, then swap
-    directories — readers never observe a *half-written* table, but the
-    swap itself is two renames, so there is a brief window in which
-    ``target_path`` does not exist. A crash between the renames leaves the
-    previous state intact in a ``<target>.__old_<uuid>`` sibling: recovery
-    is renaming that directory back. For true single-op atomicity (plus
-    time travel) use :mod:`..plans.versioned` — same merge semantics,
-    published by one atomic pointer-file rename; a table format's log
-    (Delta/Iceberg/Hudi) is the object-store-native equivalent.
-
-    ``partition_by`` lays the merged table out hive-partitioned so
-    downstream scans get partition pruning — at 100 TB a date-partitioned
-    fact turns "last month's revenue" from a full scan into a 1% scan.
-    """
-    target = spark.read.parquet(target_path) if os.path.exists(target_path) else None
-    merged = merge_scd1_df(
-        target, source, keys, check_duplicate_source_keys=check_duplicate_source_keys
-    )
-    tmp = f"{target_path}.__tmp_{uuid.uuid4().hex}"
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    if os.path.exists(target_path):
-        old = f"{target_path}.__old_{uuid.uuid4().hex}"
-        os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        os.rename(tmp, target_path)
-    # out-of-band swap: drop any stale file listing Spark cached for the
-    # target (a reader that listed the pre-merge directory would
-    # otherwise chase renamed files)
-    from .compact import _invalidate_listing
-
-    _invalidate_listing(spark, target_path)

@@ -101,9 +101,11 @@ def commit_version(df: DataFrame, root: str, partition_by: Sequence[str] | None 
     reader will see (partition columns last and every column nullable, as
     a parquet scan lists them).
 
-    Returns the committed version number. Concurrent committers race on
-    the pointer flip; last publish wins (single-writer is the supported
-    discipline, as with the reference's one-pipeline-per-table jobs)."""
+    Returns the committed version number. A table takes ONE writer at a
+    time, as with the reference's one-pipeline-per-table jobs: two
+    concurrent committers can pick the same next version, and the
+    overwrite write lets one clobber the other's snapshot directory,
+    undetected. An exclusive commit (ROADMAP open item 3) is the fix."""
     latest = current_version(root)
     existing = list_versions(root)
     nxt = max([latest or 0, *existing, 0]) + 1
@@ -182,9 +184,9 @@ def merge_scd1_versioned(
     check_duplicate_source_keys: bool = True,
     partition_by: Sequence[str] | None = None,
 ) -> int:
-    """SCD1 merge committing a new table version (atomic publish + time
-    travel) — same semantics as ``plans.scd.merge_scd1_path``, stronger
-    commit protocol. Returns the new version number."""
+    """SCD1 merge (:func:`..plans.scd.merge_scd1_df`) of ``source`` into
+    the table at ``root``, committed as its next version (atomic publish +
+    time travel). Returns the new version number."""
     target = None
     if current_version(root) is not None:
         target = read_version(spark, root)

@@ -165,7 +165,7 @@ def test_fact_joins_resolve_surrogate_keys(spark, tmp_path, lake):
 def test_fact_is_partitioned_and_pruned(spark, tmp_path, lake):
     """CARSALES defaults to a Year-partitioned gold fact; a year-filtered
     read must scan only that partition (PartitionFilters in the plan) —
-    end-to-end through merge_scd1_path(partition_by=...), including an
+    end-to-end through merge_scd1_versioned(partition_by=...), including an
     incremental merge preserving the layout."""
     import os
 
@@ -227,15 +227,16 @@ def test_versioned_publish_survives_crash_mid_commit(spark, tmp_path, lake, monk
     assert gold_table(spark, lake, "dim_dealer").count() == before
 
 
-def test_swap_publish_still_supported(spark, tmp_path, lake):
-    """The plain directory-swap protocol stays available for external
-    readers that address gold tables as bare parquet paths."""
+def test_run_pipeline_rejects_removed_publish_protocol(spark, tmp_path, lake):
+    """Gold tables have one publish protocol: any other ``publish`` value
+    is rejected before the run writes anything."""
+    import os
+
     csv = tmp_path / "batch.csv"
     write_csv(csv, make_batch0(20))
-    counts = run_pipeline(spark, str(csv), lake, publish="swap")
-    assert counts["factsales"] == 20
-    # directly parquet-addressable, no pointer indirection
-    assert spark.read.parquet(f"{lake}/gold/factsales").count() == 20
+    with pytest.raises(ValueError, match="swap"):
+        run_pipeline(spark, str(csv), lake, publish="swap")
+    assert not os.path.exists(lake)
 
 
 def test_register_gold_exposes_sql_namespace(spark, tmp_path, lake):

@@ -13,8 +13,9 @@
 3. pagerank_int's fused node/degree table (one explode aggregation
    instead of union-distinct + groupBy + anti-join) computes the same
    ranks as the r14 formulation, and still rejects dangling nodes.
-4. The IVF hot-cell write split keeps the per-generation file bound
-   (<= _IVF_WRITE_SPLIT per cell) and loses/duplicates nothing.
+4. The cell-partitioned IVF index writes keep the per-generation file
+   bound (one file per cell per build or append) and lose or duplicate
+   nothing.
 5. connected_components hands back a localCheckpoint and drops its
    cache entries (the r14 ADVICE leak): persistent-RDD count returns to
    its baseline after the call.
@@ -220,56 +221,40 @@ def test_pagerank_int_still_rejects_dangling(spark):
 
 
 # ---------------------------------------------------------------------------
-# 4. IVF hot-cell split: bounded files, nothing lost
+# 4. IVF index writes: bounded files, nothing lost
 # ---------------------------------------------------------------------------
 
 
 def test_ivf_write_split_bounds_files_and_preserves_rows(spark, sf_dir):
-    """With write_split=w the hot-cell sub-key bounds each generation at
-    w files per cell and the index content is unchanged (cell placement
-    identical — the sub-key only splits WITHIN a cell)."""
+    """The build writes one file per cell and each append adds at most one
+    more, and the appended index holds every vector exactly once."""
     from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.operators.similarity import (
         append_ivf_index,
         build_ivf_index,
         kmeans_centroids,
     )
 
-    w = 4
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.filter(F.col("vec_id") % 7 != 0)
     batch = emb.filter(F.col("vec_id") % 7 == 0)
     cents = kmeans_centroids(base, n_centroids=8, n_iters=1)
-    path = _tmp("ivf_split")
-    plain = _tmp("ivf_plain")
+    path = _tmp("ivf_plain")
     try:
-        build_ivf_index(base, cents, path, write_split=w)
+        build_ivf_index(base, cents, path)
         for d in os.listdir(path):
             if d.startswith("cell="):
                 n = len(glob.glob(os.path.join(path, d, "*.parquet")))
-                assert 1 <= n <= w, f"{d}: {n}"
-        index = append_ivf_index(batch, cents, path, write_split=w)
+                assert n == 1, f"{d}: {n}"
+        index = append_ivf_index(batch, cents, path)
         for d in os.listdir(path):
             if d.startswith("cell="):
                 n = len(glob.glob(os.path.join(path, d, "*.parquet")))
-                assert n <= 2 * w, f"{d}: {n}"
+                assert 1 <= n <= 2, f"{d}: {n}"
         got = sorted(r.vec_id for r in index.select("vec_id").collect())
         want = sorted(r.vec_id for r in emb.select("vec_id").collect())
         assert got == want
-        # (cell, id) placement identical to the default single-key write
-        build_ivf_index(base, cents, plain)
-        append_ivf_index(batch, cents, plain)
-        split_cells = sorted(
-            (r.vec_id, r.cell)
-            for r in spark.read.parquet(path).select("vec_id", "cell").collect()
-        )
-        plain_cells = sorted(
-            (r.vec_id, r.cell)
-            for r in spark.read.parquet(plain).select("vec_id", "cell").collect()
-        )
-        assert split_cells == plain_cells
     finally:
         shutil.rmtree(path, ignore_errors=True)
-        shutil.rmtree(plain, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -10,11 +10,14 @@ from pyspark.sql import functions as F
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.scd import (
     DuplicateMergeKeyError,
     merge_scd1_df,
-    merge_scd1_path,
 )
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.star import (
     build_dim,
     build_fact,
+)
+from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.versioned import (
+    merge_scd1_versioned,
+    read_version,
 )
 
 CARSALES_COLS = ["Branch_ID", "Dealer_ID", "BranchName", "DealerName", "Revenue", "Units_Sold"]
@@ -83,17 +86,20 @@ def test_merge_rejects_duplicate_source_keys(spark):
 
 
 def test_merge_path_atomic_swap(spark, tmp_path, batch0):
+    """A merge into a table path publishes a new version atomically; the
+    previous version stays readable."""
     target = str(tmp_path / "dim_branch")
     dim0 = build_dim(batch0, ["Branch_ID"], ["BranchName"], "dim_branch_key")
-    merge_scd1_path(spark, target, dim0, ["dim_branch_key"])
-    assert spark.read.parquet(target).count() == 3
+    assert merge_scd1_versioned(spark, target, dim0, ["dim_branch_key"]) == 1
+    assert read_version(spark, target).count() == 3
     batch1 = carsales(spark, [("BR9", "DL9", "New Motors", "New Dealer", 99, 1)])
     dim1 = build_dim(
         batch1, ["Branch_ID"], ["BranchName"], "dim_branch_key",
-        existing=spark.read.parquet(target),
+        existing=read_version(spark, target),
     )
-    merge_scd1_path(spark, target, dim1, ["dim_branch_key"])
-    assert spark.read.parquet(target).count() == 4
+    assert merge_scd1_versioned(spark, target, dim1, ["dim_branch_key"]) == 2
+    assert read_version(spark, target).count() == 4
+    assert read_version(spark, target, version=1).count() == 3
 
 
 def test_fact_build_star_join(spark, batch0):

@@ -1,4 +1,4 @@
-"""Streaming SCD1 upsert (foreachBatch -> portable merge)."""
+"""Streaming SCD1 upsert (foreachBatch -> versioned merge)."""
 
 from __future__ import annotations
 
@@ -16,6 +16,9 @@ def _write_csv(path, rows):
 
 
 def test_stream_upsert_merges_batches_and_is_replay_safe(spark, tmp_path):
+    from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.versioned import (
+        read_version,
+    )
     from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.streaming.upsert import (
         stream_upsert_scd1,
     )
@@ -37,7 +40,7 @@ def test_stream_upsert_merges_batches_and_is_replay_safe(spark, tmp_path):
     # batch 1: initial load
     _write_csv(src / "b1.csv", [(1, "a"), (2, "b")])
     run()
-    assert {(r["k"], r["v"]) for r in spark.read.parquet(gold).collect()} == {
+    assert {(r["k"], r["v"]) for r in read_version(spark, gold).collect()} == {
         (1, "a"),
         (2, "b"),
     }
@@ -45,21 +48,21 @@ def test_stream_upsert_merges_batches_and_is_replay_safe(spark, tmp_path):
     # batch 2: one update, one insert — merged incrementally
     _write_csv(src / "b2.csv", [(2, "b2"), (3, "c")])
     run()
-    assert {(r["k"], r["v"]) for r in spark.read.parquet(gold).collect()} == {
+    assert {(r["k"], r["v"]) for r in read_version(spark, gold).collect()} == {
         (1, "a"),
         (2, "b2"),
         (3, "c"),
     }
 
     # re-run with no new files: checkpoint makes it a no-op
-    before = sorted(os.listdir(os.path.dirname(gold)))
+    before = sorted(os.listdir(os.path.join(gold, "_versions")))
     run()
-    assert {(r["k"], r["v"]) for r in spark.read.parquet(gold).collect()} == {
+    assert {(r["k"], r["v"]) for r in read_version(spark, gold).collect()} == {
         (1, "a"),
         (2, "b2"),
         (3, "c"),
     }
-    assert sorted(os.listdir(os.path.dirname(gold))) == before
+    assert sorted(os.listdir(os.path.join(gold, "_versions"))) == before
 
 
 def test_stream_upsert_recovers_from_mid_batch_crash(spark, tmp_path):
@@ -69,8 +72,9 @@ def test_stream_upsert_recovers_from_mid_batch_crash(spark, tmp_path):
     replay the uncommitted batch, and the idempotent SCD1 merge must
     absorb the replay: final table has no duplicates and no loss."""
     import pytest
-    from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.scd import (
-        merge_scd1_path,
+    from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.plans.versioned import (
+        merge_scd1_versioned,
+        read_version,
     )
 
     src = tmp_path / "landing"
@@ -92,7 +96,7 @@ def test_stream_upsert_recovers_from_mid_batch_crash(spark, tmp_path):
         )
 
     def merge_then_crash(batch, batch_id):
-        merge_scd1_path(spark, gold, batch, ["k"])
+        merge_scd1_versioned(spark, gold, batch, ["k"])
         if batch_id == 1:
             raise RuntimeError("injected crash: write done, offsets not committed")
 
@@ -107,14 +111,14 @@ def test_stream_upsert_recovers_from_mid_batch_crash(spark, tmp_path):
         q.awaitTermination()
 
     # crash landed after the write: the target already holds both batches
-    assert {(r["k"], r["v"]) for r in spark.read.parquet(gold).collect()} == want
+    assert sorted((r["k"], r["v"]) for r in read_version(spark, gold).collect()) == sorted(want)
 
     # restart from the same checkpoint with a well-behaved merge
     replayed = []
 
     def merge_and_count(batch, batch_id):
         replayed.append(batch_id)
-        merge_scd1_path(spark, gold, batch, ["k"])
+        merge_scd1_versioned(spark, gold, batch, ["k"])
 
     q2 = (
         reader()
@@ -128,7 +132,7 @@ def test_stream_upsert_recovers_from_mid_batch_crash(spark, tmp_path):
     # the uncommitted batch was replayed (not skipped, not duplicated
     # beyond it), and the re-merge changed nothing: no dupes, no loss
     assert replayed, "restart must replay the batch whose offsets never committed"
-    assert {(r["k"], r["v"]) for r in spark.read.parquet(gold).collect()} == want
+    assert sorted((r["k"], r["v"]) for r in read_version(spark, gold).collect()) == sorted(want)
 
 
 def test_stream_upsert_versioned_commits_per_batch(spark, tmp_path):
@@ -139,7 +143,7 @@ def test_stream_upsert_versioned_commits_per_batch(spark, tmp_path):
         read_version,
     )
     from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.streaming.upsert import (
-        stream_upsert_scd1_versioned,
+        stream_upsert_scd1,
     )
 
     src = tmp_path / "landing"
@@ -154,7 +158,7 @@ def test_stream_upsert_versioned_commits_per_batch(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .csv(str(src))
         )
-        stream_upsert_scd1_versioned(spark, stream, root, ["k"], ckpt)
+        stream_upsert_scd1(spark, stream, root, ["k"], ckpt)
 
     _write_csv(src / "b1.csv", [(1, "a"), (2, "b")])
     run()
