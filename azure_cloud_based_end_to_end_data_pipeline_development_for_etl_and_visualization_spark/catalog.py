@@ -8864,6 +8864,8 @@ def q_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col(f"mh{i}").alias(f"__b{i}") for i in range(8)],
     )
 
+    # per-column == is NULL-propagating: this relies on minhash_signatures
+    # never emitting a NULL mh column (shingle-less docs get no row)
     def _band_agree(start: int, width: int):
         eqs = [
             F.col(f"__a{i}") == F.col(f"__b{i}")
@@ -9613,22 +9615,9 @@ def q_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registry
 # ---------------------------------------------------------------------------
 
-#: Registry order is load-bearing: the driver's correctness gate checks the
-#: FIRST 50 entries (CORRECTNESS_r01.json cut exactly there). Each round
-#: leads with whatever has no driver signal yet (never-windowed queries,
-#: rewrites whose plans changed, brand-new entries), keeps the flagship and
-#: a representative green set under verification, and demotes cumulative
-#: greens behind the window. Composition pinned by
-#: tests/test_entry_contract.test_driver_window_composition.
+#: Every catalog query by name, in registration order: this literal, then
+#: the ``QUERIES[...] = ...`` registrations that follow their definitions.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # NOTE (round 9): the literal order below is the HISTORICAL r8
-    # registration order, no longer the driver window — the round-9
-    # window is composed by the reorder at the END of this module
-    # (search: ROUND-9 WINDOW). Comments below kept for provenance.
-    # == ROUND-8 WINDOW (slots 1-50) ====================================
-    # -- 1-11: the round-7 rotation head (r7 VERDICT item 1): upgraded /
-    #    added past the r7 window, all judge-verified at both SFs in r7;
-    #    driver-green here completes 232/232 cumulative attestation ----
     "q_dedup_clusters": q_dedup_clusters,
     "q_leakage_safe_split": q_leakage_safe_split,
     "q_tokenizer_fertility": q_tokenizer_fertility,
@@ -9640,8 +9629,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_join_cardinality_est": q_join_cardinality_est,
     "q_lsh_recall_eval": q_lsh_recall_eval,
     "q_price_index": q_price_index,
-    # -- 12-33: round-8 additions (all oracle-twinned; verified at
-    #    sf0.001 + spot-verified sf0.01 this session) -------------------
     "q_spearman_corr": q_spearman_corr,
     "q_kruskal_wallis": q_kruskal_wallis,
     "q_roc_auc": q_roc_auc,
@@ -9669,11 +9656,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_embedding_norm_profile": q_embedding_norm_profile,
     "q_rolling_slope": q_rolling_slope,
     "q_seasonality_strength": q_seasonality_strength,
-    # -- 34-50: the round-8 varchar-route oracle fix re-attestations —
-    #    every query whose DuckDB twin changed this round (wide
-    #    int->double now correctly rounded) re-enters the window so the
-    #    driver re-verifies them under the patched oracles; plus the two
-    #    de-hinted plans and the survival-table semantics fix ----------
     "q_autocorr": q_autocorr,
     "q_gini": q_gini,
     "q_ks_test": q_ks_test,
@@ -9686,22 +9668,14 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_anova_f": q_anova_f,
     "q_target_encode_loo": q_target_encode_loo,
     "q_rfm": q_rfm,
-    # == PAST THE WINDOW ================================================
-    # == former round-7 window (all driver-green in r7) =================
-    # -- 1-4: session-5 batch D — the 25 entries below (through
-    #    q_quarantine_split) are the only catalog queries with no driver
-    #    row after r6; all 23 oracle-twinned ones judge-verified via
-    #    check_oracle in r6. Driver-green here -> 199/199 cumulative ----
     "q_scd2_asof_lookup": q_scd2_asof_lookup,
     "q_vocab_coverage": q_vocab_coverage,
     "q_degree_distribution": q_degree_distribution,
     "q_event_path_topk": q_event_path_topk,
-    # -- 5-25: round-6 session-6 batch ----------------------------------
     "q_prefix_filter_join": q_prefix_filter_join,
     "q_token_budget_fill": q_token_budget_fill,
     "q_mixture_waterfill": q_mixture_waterfill,
     "q_time_weighted_avg": q_time_weighted_avg,
-    "q_anova_f": q_anova_f,
     "q_interval_coalesce": q_interval_coalesce,
     "q_scd3_merge": q_scd3_merge,
     "q_tfidf_cosine_pairs": q_tfidf_cosine_pairs,
@@ -9718,51 +9692,23 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_label_centroids": q_label_centroids,
     "q_gdpr_delete": q_gdpr_delete,
     "q_quarantine_split": q_quarantine_split,
-    # -- 26-50: round-7 additions (inserted here as built) + flagship +
-    #    representative multi-round greens kept under verification ------
     "q_pagerank_exact": q_pagerank_exact,
     "q_split_singleton_agreement": q_split_singleton_agreement,
     "q_incremental_distinct_exact": q_incremental_distinct_exact,
-    "q_ks_test": q_ks_test,
-    "q_gini": q_gini,
-    "q_target_encode_loo": q_target_encode_loo,
-    "q_rfm": q_rfm,
-    "q_autocorr": q_autocorr,
     "q_kfold_assign": q_kfold_assign,
     "q_minhash_containment": q_minhash_containment,
     "q_cosine_topk_ivf_indexed": q_cosine_topk_ivf_indexed,
     "q_cosine_topk_lsh": q_cosine_topk_lsh,
     "q_benford_check": q_benford_check,
-    "q_survival_table": q_survival_table,
     "q_bloom_filter": q_bloom_filter,
-    "q_changepoint": q_changepoint,
     "q_streaming_bloom": q_streaming_bloom,
     "q_cohort_ltv": q_cohort_ltv,
     "q_audience_overlap": q_audience_overlap,
     "q_simhash_eval": q_simhash_eval,
-    "q_ab_cuped": q_ab_cuped,
     "q_lorenz_deciles": q_lorenz_deciles,
     "q_order_gaps": q_order_gaps,
     "q_readability": q_readability,
     "q_weekday_decompose": q_weekday_decompose,
-    # -- 51-52: first past the window — rows-only in r1-r6 (clean
-    #    driver rows-only records every round), upgraded to oracle
-    #    twins this round via the recursive-closure twin; they lead
-    #    round 8's rotation for the driver-attested re-verify and are
-    #    judge-verifiable via tools/check_oracle.py now ---------------
-    "q_dedup_clusters": q_dedup_clusters,
-    "q_leakage_safe_split": q_leakage_safe_split,
-    # -- 53-55: round-7 session-7 additions, also past the window —
-    #    judge-verifiable via check_oracle; window rotation for round 8
-    "q_tokenizer_fertility": q_tokenizer_fertility,
-    "q_mixture_temperature": q_mixture_temperature,
-    "q_dataset_card": q_dataset_card,
-    "q_cross_source_dups": q_cross_source_dups,
-    "q_equi_depth_histogram": q_equi_depth_histogram,
-    "q_sax_symbols": q_sax_symbols,
-    "q_join_cardinality_est": q_join_cardinality_est,
-    "q_lsh_recall_eval": q_lsh_recall_eval,
-    "q_price_index": q_price_index,
     "q_star_join": q_star_join,
     "q_scd1_merge": q_scd1_merge,
     "q_scd2_merge": q_scd2_merge,
@@ -9785,30 +9731,18 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_funnel_steps": q_funnel_steps,
     "q_salted_join": q_salted_join,
     "q_cms_heavy_hitters": q_cms_heavy_hitters,
-    # == PAST THE WINDOW (all driver-green cumulatively) ================
-    # -- round-6 window block: all 50 went driver-green in r6 -----------
     "q_outlier_zscore": q_outlier_zscore,
     "q_drift_chi2": q_drift_chi2,
     "q_sample_weighted": q_sample_weighted,
     "q_profile_table_approx": q_profile_table_approx,
     "q_pq_topk": q_pq_topk,
-    # -- 6-8: round-6 rewrites: the r5 canonicalizer err (feature vector
-    #    now posexploded + oracle-twinned) and the two de-globalized
-    #    sorts (two-phase range rank) — re-verify under new plans ------
     "q_multimodal_features": q_multimodal_features,
     "q_ntile_cume": q_ntile_cume,
     "q_percentile_rank": q_percentile_rank,
-    # -- 9-12: round-6 additions (cohort retention, z-order layout,
-    #    multimodal resize, minhash jaccard estimation) ----------------
     "q_retention_cohort": q_retention_cohort,
     "q_zorder_layout": q_zorder_layout,
     "q_multimodal_resize": q_multimodal_resize,
     "q_minhash_jaccard_est": q_minhash_jaccard_est,
-    # -- 13-25: round-6 session-2 additions (curation gates, collocation
-    #    lift, IVFADC composition, fuzzy join, PageRank, time-RANGE
-    #    rolling window, transition matrix, one-scan corr matrix,
-    #    Welch t-test gate, streaming EWMA anomaly, LM perplexity,
-    #    stream-stream interval join) ----------------------------------
     "q_gopher_rules": q_gopher_rules,
     "q_domain_cap": q_domain_cap,
     "q_bigram_lift": q_bigram_lift,
@@ -9818,54 +9752,31 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_pagerank": q_pagerank,
     "q_rolling_time_window": q_rolling_time_window,
     "q_transition_matrix": q_transition_matrix,
-    "q_corr_matrix": q_corr_matrix,
     "q_ab_ttest": q_ab_ttest,
     "q_streaming_anomaly": q_streaming_anomaly,
     "q_unigram_perplexity": q_unigram_perplexity,
     "q_streaming_interval_join": q_streaming_interval_join,
-    # -- 27-32: round-6 session-3 additions (one-scan OLS fit, linear
-    #    gap interpolation, last-touch attribution, cross-engine table
-    #    checksum, compaction surfaced end-to-end, BPE merge training) --
-    "q_linreg": q_linreg,
     "q_interpolate_linear": q_interpolate_linear,
     "q_last_touch": q_last_touch,
     "q_table_checksum": q_table_checksum,
     "q_compact_files": q_compact_files,
     "q_bpe_train": q_bpe_train,
-    # -- 33-36: round-6 session-4 additions (grouped OLS, incremental
-    #    join-view maintenance, char-entropy gate, BPE application) -----
-    "q_linreg_group": q_linreg_group,
     "q_incremental_join": q_incremental_join,
     "q_char_entropy": q_char_entropy,
     "q_bpe_apply": q_bpe_apply,
-    # -- 37: streaming left-outer interval join (watermark-driven
-    #    null extension, staged 3-batch replay) -------------------------
     "q_streaming_left_interval": q_streaming_left_interval,
-    # -- 38: leakage-safe split (near-dup clusters never straddle) ------
-    # -- 39-42: round-6 session-5 additions (sort-based 2-D skyline,
-    #    basket association rules, degree-ordered triangle census,
-    #    mergeable-HLL incremental distinct) ----------------------------
     "q_skyline": q_skyline,
     "q_basket_rules": q_basket_rules,
     "q_triangle_count": q_triangle_count,
     "q_hll_incremental_distinct": q_hll_incremental_distinct,
-    # -- 43-47: round-6 session-5 batch B (OHLC bars, rolling distinct
-    #    exact + sketch twin, semantic dedup, bigram-LM perplexity) -----
     "q_ohlc_bars": q_ohlc_bars,
     "q_rolling_dau": q_rolling_dau,
     "q_rolling_dau_hll": q_rolling_dau_hll,
     "q_semantic_dedup": q_semantic_dedup,
     "q_bigram_perplexity": q_bigram_perplexity,
-    # -- 48-50: session-5 batch C (z-order pruning payoff, streaming
-    #    CMS maintenance, sketch-based distinct cube). The round-6 window
-    #    is now EXACTLY the 50 queries with no driver row yet; the
-    #    flagship leaves the window for the first time — it is
-    #    triple-driver-green (r1/r2/r5) and plan-pinned, so every slot
-    #    goes to a query the driver has never seen -----------------------
     "q_zorder_pruning_stats": q_zorder_pruning_stats,
     "q_streaming_cms_topk": q_streaming_cms_topk,
     "q_cube_distinct_sketch": q_cube_distinct_sketch,
-    # -- round-5-window greens ------------------------------------------
     "q_word_repetition": q_word_repetition,
     "q_tfidf_topk": q_tfidf_topk,
     "q_regex_extract": q_regex_extract,
@@ -9883,7 +9794,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_sequence_pack": q_sequence_pack,
     "q_profile_table": q_profile_table,
     "q_incremental_rollup": q_incremental_rollup,
-    # -- cumulatively driver-green in rounds 1-5 ------------------------
     "q_streaming_sliding": q_streaming_sliding,
     "q_streaming_session": q_streaming_session,
     "q_schema_evolution": q_schema_evolution,
@@ -16572,81 +16482,6 @@ ORACLES["q_boilerplate_ngrams"] = f"""
 
 
 # ---------------------------------------------------------------------------
-# ROUND-9 WINDOW: the driver's correctness gate reads the FIRST 50 entries
-# of QUERIES, so registry order is load-bearing. Composition (pinned by
-# tests/test_entry_contract.test_driver_window_composition, candidates
-# computed by tools/attestation.py — never hand-curated again):
-#   slots 1-20: the round-8 batch-3/4 queries with no driver row yet
-#     (judge-attested at both SFs in r8; driver-green here completes
-#     cumulative attestation of the whole r8 catalog);
-#   slots 21-38: the round-9 additions (all oracle-twinned, verified at
-#     sf0.001 + sf0.01 this session);
-#   slots 39-50: re-attestation of every query whose PLAN changed under
-#     the round-9 hint-audit fixes (oracle hashes are layout-independent,
-#     so these re-verify the de-hinted plans end-to-end).
-# ---------------------------------------------------------------------------
-
-_R9_WINDOW = [
-    # -- 1-20: r8 batch-3/4 attestation head (tools/attestation.py) ----
-    "q_grouped_median",
-    "q_cohens_kappa",
-    "q_chi2_contingency",
-    "q_ewma_dyadic",
-    "q_max_drawdown",
-    "q_local_clustering",
-    "q_mips_topk",
-    "q_knn_label_vote",
-    "q_revenue_share_filter",
-    "q_above_brand_avg",
-    "q_acf_grid",
-    "q_length_band_filter",
-    "q_weighted_median",
-    "q_cross_corr",
-    "q_burstiness",
-    "q_embargo_split",
-    "q_hour_week_heatmap",
-    "q_repeat_rate",
-    "q_weekly_active_overlap",
-    "q_zipf_check",
-    # -- 21-38: round-9 additions --------------------------------------
-    "q_mann_whitney",
-    "q_runs_test",
-    "q_theil_sen",
-    "q_top_supplier",
-    "q_promo_share_monthly",
-    "q_late_ship_priority",
-    "q_dwell_time_bands",
-    "q_dau_wau_stickiness",
-    "q_cold_start_rate",
-    "q_user_hhi",
-    "q_assortativity",
-    "q_common_neighbors_topk",
-    "q_returned_items_topk",
-    "q_dedup_survivorship",
-    "q_dedup_yield_curve",
-    "q_vocab_coverage_curve",
-    "q_contamination_by_source",
-    "q_boilerplate_ngrams",
-    # -- 39-50: round-9 plan-change re-attestations (hint-audit fixes) --
-    "q_star_join",
-    "q_star_join_preagg",
-    "q_left_join_lookup",
-    "q_filter_join_topk",
-    "q_decontaminate",
-    "q_cosine_topk",
-    "q_hard_negatives",
-    "q_data_quality",
-    "q_scd1_merge",
-    "q_cdc_apply",
-    "q_skyline",
-    "q_abc_pareto",
-]
-
-_rest = [n for n in QUERIES if n not in set(_R9_WINDOW)]
-QUERIES = {n: QUERIES[n] for n in [*_R9_WINDOW, *_rest]}
-
-
-# ---------------------------------------------------------------------------
 # round-9 batch 4: paired tests, grouped inequality, market structure
 # ---------------------------------------------------------------------------
 
@@ -18784,89 +18619,6 @@ ORACLES["q_events_per_user_day_dist"] = """
                as share_ppm
     from dist order by n_events
 """
-
-
-# ---------------------------------------------------------------------------
-# ROUND-10 WINDOW: the driver's correctness gate reads the FIRST 50 entries
-# of QUERIES, so registry order is load-bearing (this block supersedes the
-# ROUND-9 WINDOW reorder above — it runs last, after every round-10
-# registration). Composition (pinned by tests/test_entry_contract.
-# test_driver_window_composition, candidates computed by
-# tools/attestation.py — never hand-curated):
-#   slots 1-13: the 13 round-9 batch-4/5/6 queries with no driver row yet
-#     (judge-attested at sf0.01 AND sf0.1 in r9; driver-green here makes
-#     the whole pre-round-10 catalog cumulatively driver-attested);
-#   slots 14-38: the 25 round-10 additions (all oracle-twinned and
-#     verified at sf0.001 + sf0.01 + sf0.1 this session);
-#   slots 39-44: re-attestation of every query whose PLAN changed this
-#     round (banded_id_pairs candidate rewrite; with_surrogate_key's
-#     two-phase rank) — oracle hashes are layout-independent, so these
-#     re-verify the reshaped plans end-to-end;
-#   slots 45-50: the 6 oldest driver attestations (round-1 greens) —
-#     freshness rotation for the long tail.
-# ---------------------------------------------------------------------------
-
-_R10_WINDOW = [
-    # -- 1-13: r9 attestation head (tools/attestation.py --unattested) --
-    "q_wilcoxon_signed_rank",
-    "q_gini_by_nation",
-    "q_supplier_hhi_by_nation",
-    "q_price_dispersion_topk",
-    "q_split_balance_check",
-    "q_ma_crossover",
-    "q_diff_in_diff",
-    "q_langid_confusion",
-    "q_dedup_token_savings",
-    "q_tv_drift",
-    "q_ship_latency_bands",
-    "q_reorder_interval_median",
-    "q_first_vs_repeat_value",
-    # -- 14-29: round-10 additions ---------------------------------------
-    "q_mcnemar_test",
-    "q_hellinger_drift",
-    "q_order_linecount_dist",
-    "q_backlog_daily",
-    "q_supplier_rank_shift",
-    "q_type_token_ratio",
-    "q_stopword_band_mix",
-    "q_candidate_jaccard_hist",
-    "q_seasonal_index",
-    "q_weekend_uplift",
-    "q_quantity_iqr_fences",
-    "q_levene_quantity",
-    "q_top2_share_by_nation",
-    "q_order_value_decile_bounds",
-    "q_return_rate_by_brand_month",
-    "q_events_per_user_day_dist",
-    # -- 30-34: round-10 batch-4 additions -------------------------------
-    "q_price_quantity_corr_by_brand",
-    "q_spend_consistency_bands",
-    "q_char_class_profile",
-    "q_discount_effect_grid",
-    "q_nation_trade_balance",
-    # -- 35-38: round-10 batch-5 additions -------------------------------
-    "q_doc_dup_ratio_by_length_band",
-    "q_token_length_percentiles",
-    "q_supplier_dependency_bands",
-    "q_brands_per_order_dist",
-    # -- 39-44: round-10 plan-change re-attestations ---------------------
-    "q_ngram_jaccard",
-    "q_dedup_yield_curve",
-    "q_tfidf_cosine_pairs",
-    "q_scd1_merge",
-    "q_surrogate_key",
-    "q_time_travel",
-    # -- 45-50: oldest driver attestations (round-1 greens) --------------
-    "q_argminmax",
-    "q_arith_derive",
-    "q_cast_agg",
-    "q_count_distinct",
-    "q_cross_join",
-    "q_cube",
-]
-
-# (the window reorder itself runs at the very END of this module, after
-# every round-10 registration — see the final lines of the file)
 
 
 # ---------------------------------------------------------------------------
@@ -22907,94 +22659,6 @@ ORACLES["q_streaming_neardup_ingest"] = ORACLES["q_dedup_incremental"]
 
 
 # ---------------------------------------------------------------------------
-# ROUND-11 WINDOW: the driver's correctness gate reads the FIRST 50 entries
-# of QUERIES, so registry order is load-bearing (this block supersedes the
-# ROUND-10 WINDOW reorder — _R10_WINDOW above stays for provenance but no
-# longer drives the order). Composition (pinned by tests/test_entry_contract.
-# test_driver_window_composition; the ledger reports 0 never-attested
-# pre-round-11 queries, so the head is this round's additions — computed
-# via tools/attestation.py --unattested, never hand-curated):
-#   slots 1-39: the 39 oracle-twinned round-11 additions (batches 1-8,
-#     verified at sf0.001 + sf0.01 + sf0.1 this session; the rows-only
-#     q_bm25_topk is pinned in tests/test_round11.py instead);
-#   slots 40-50: re-attestation of every ORACLE-TWINNED query whose plan
-#     or expression changed this round (PPJoin+ prunes in
-#     prefix_filter_pairs; banded_id_pairs floor-division buckets; the
-#     query-batch guards in the similarity APIs; the nullif divisor
-#     guards) — the rows-only q_pq_topk/q_ivfpq_topk guard changes are
-#     pinned by pytest canaries instead, keeping the window fully
-#     oracle-twinned. The additions head fills the window exactly this
-#     round, so the oldest-attestation freshness rotation pauses (every
-#     catalog query remains cumulatively attested per the ledger).
-#   Batches 9+ (q_dedup_incremental, q_multiset_ops, q_robust_scaler,
-#     q_rank_dependence_grid, q_mixture_interleave, ...) do not fit the
-#     50-slot window this round: they are 3-SF verified locally, carry
-#     no ledger row yet (the attestation test treats no-row queries as
-#     this-round-new), and form the round-12 window head.
-# ---------------------------------------------------------------------------
-
-_R11_WINDOW = [
-    # -- 1-39: round-11 additions (attestation head: never driver-run) --
-    "q_cramers_v",
-    "q_mann_kendall",
-    "q_bowley_skew",
-    "q_grouped_mode",
-    "q_order_count_dispersion",
-    "q_proportion_ztest",
-    "q_split_neardup_leaks",
-    "q_length_quality_grid",
-    "q_kendall_w",
-    "q_minmax_scale_ppm",
-    "q_cohens_d",
-    "q_wilson_ci",
-    "q_chars_per_token_by_source",
-    "q_quantile_normalization",
-    "q_gini_split_quality",
-    "q_custdist",
-    "q_small_qty_revenue",
-    "q_large_volume_customers",
-    "q_disjunctive_revenue",
-    "q_idle_high_balance",
-    "q_waiting_suppliers",
-    "q_volume_shipping",
-    "q_market_share",
-    "q_odds_ratio",
-    "q_durbin_watson",
-    "q_gamma_concordance",
-    "q_cochran_q",
-    "q_dup_ngram_coverage",
-    "q_partial_corr",
-    "q_edit_distance_dedup",
-    "q_mutual_knn_pairs",
-    "q_cross_lang_neardup",
-    "q_doc_prefix_dup",
-    "q_map_funcs",
-    "q_lateral_topk",
-    "q_month_streaks",
-    "q_nth_value_window",
-    "q_systematic_sample",
-    "q_bitmask_rollup",
-    # -- 40-50: round-11 plan/expression-change re-attestations ----------
-    "q_prefix_filter_join",
-    "q_ngram_jaccard",
-    "q_dedup_yield_curve",
-    "q_tfidf_cosine_pairs",
-    "q_candidate_jaccard_hist",
-    "q_cosine_topk",
-    "q_mips_topk",
-    "q_knn_label_vote",
-    "q_hard_negatives",
-    "q_mcnemar_test",
-    "q_levene_quantity",
-]
-
-# ROUND-11 WINDOW reorder (kept for provenance — the ROUND-12 WINDOW at
-# the bottom of this file supersedes it)
-_r11_rest = [n for n in QUERIES if n not in set(_R11_WINDOW)]
-QUERIES = {n: QUERIES[n] for n in [*_R11_WINDOW, *_r11_rest]}
-
-
-# ---------------------------------------------------------------------------
 # round-12 batch 1: incremental ANN index maintenance + driver-checked
 # recall evaluation + streaming cell routing + z-order-aware compaction
 # (VERDICT r11 items 3, 4, 5)
@@ -23420,90 +23084,6 @@ ORACLES["q_compact_zorder"] = f"""
             end)::bigint as skippable
     from tiles group by zfile order by zfile
 """
-
-
-# ---------------------------------------------------------------------------
-# ROUND-12 WINDOW: the driver's correctness gate reads the FIRST 50 entries
-# of QUERIES, so registry order is load-bearing (this block supersedes the
-# ROUND-11 WINDOW reorder above, kept for provenance). Composition (pinned
-# by tests/test_entry_contract.test_driver_window_composition):
-#   slots 1-7: the 7 never-driver-attested queries, in the ledger's own
-#     order (tools/attestation.py --unattested at round-12 start — r11
-#     VERDICT item 1; all 7 were judge-verified green at sf0.01 last
-#     session, so this is attestation bookkeeping, not correctness risk).
-#     q_bm25_topk is the window's one rows-only slot — deliberate: the
-#     driver's weaker rows-only check is still its first-ever driver row.
-#   slots 8-12: the round-12 additions (incremental IVF append, recall
-#     eval, streaming cell routing, z-order compaction, per-cell index
-#     compaction — VERDICT items 3/4/5), 3-SF oracle-verified before
-#     registration.
-#   slots 13-50: freshness rotation — the 38 STALEST oracle-twinned
-#     greens by most-recent-attestation round (computed from the ledger,
-#     never hand-curated): all 32 last attested in round 1, plus the
-#     first 6 of the round-4 cohort in name order.
-# ---------------------------------------------------------------------------
-
-_R12_WINDOW = [
-    # -- 1-7: never-driver-attested head (attestation ledger order) -----
-    "q_bm25_topk",
-    "q_dedup_incremental",
-    "q_multiset_ops",
-    "q_robust_scaler",
-    "q_rank_dependence_grid",
-    "q_mixture_interleave",
-    "q_streaming_neardup_ingest",
-    # -- 8-12: round-12 additions ---------------------------------------
-    "q_ivf_index_append",
-    "q_ivf_recall_eval",
-    "q_streaming_ivf_assign",
-    "q_compact_zorder",
-    "q_ivf_index_compact",
-    # -- 13-50: stalest-attestation freshness rotation (round-1 cohort,
-    #    then the round-4 cohort head, name order within cohort) --------
-    "q_date_parts",
-    "q_distinct",
-    "q_empty_relation",
-    "q_except",
-    "q_exists_subquery",
-    "q_filter_isnotnull",
-    "q_filter_isnull",
-    "q_full_outer_join",
-    "q_groupby_agg",
-    "q_grouping_sets",
-    "q_histogram",
-    "q_in_subquery",
-    "q_intersect",
-    "q_join_project_disambiguate",
-    "q_left_anti",
-    "q_left_semi",
-    "q_max_global",
-    "q_null_safe_join",
-    "q_orderby_limit",
-    "q_pivot",
-    "q_project",
-    "q_rollup",
-    "q_scan_parquet",
-    "q_split_getitem",
-    "q_sql_analytics",
-    "q_sql_over_path",
-    "q_stats_moments",
-    "q_topk_per_group",
-    "q_union_all",
-    "q_union_missing_cols",
-    "q_weighted_avg",
-    "q_window_frame",
-    "q_array_funcs",
-    "q_cosine_topk_ivf_exact",
-    "q_curation_pipeline",
-    "q_dedup_keep_best",
-    "q_dedup_simhash",
-    "q_doc_fingerprint",
-]
-
-# ROUND-12 WINDOW reorder (must be the last statement touching QUERIES —
-# every registration above, including late batches, precedes it)
-_r12_rest = [n for n in QUERIES if n not in set(_R12_WINDOW)]
-QUERIES = {n: QUERIES[n] for n in [*_R12_WINDOW, *_r12_rest]}
 
 
 # ---------------------------------------------------------------------------
@@ -24388,170 +23968,3 @@ def _dk_substring_savings_sql(L: int = _SUBSTR_L) -> str:
 
 QUERIES["q_substring_savings_by_source"] = q_substring_savings_by_source
 ORACLES["q_substring_savings_by_source"] = _dk_substring_savings_sql()
-
-
-
-# ---------------------------------------------------------------------------
-# ROUND-13 WINDOW: the driver's correctness gate reads the FIRST 50 entries
-# of QUERIES, so registry order is load-bearing (this block supersedes the
-# ROUND-12 WINDOW reorder above, kept for provenance). Composition (pinned
-# by tests/test_entry_contract.test_driver_window_composition):
-#   slots 1-10: the round-13 additions and graduations — q_semantic_dedup's
-#     FIRST oracle-twinned driver row (graduated from rows-only via seeded
-#     plan-literal centroids, r12 VERDICT item 2), the two PQ scoring-
-#     machinery literal twins (r12 item 3), the substring-duplication rung
-#     (r12 item 4) and the signature-artifact compaction loop (r12 item 5)
-#     plus the scrub, incremental, streaming, witness and savings members
-#     of the substring rung (q_substring_scrub, q_substring_incremental,
-#     q_streaming_substring_ingest, q_substring_dup_witness,
-#     q_substring_savings_by_source)
-#     — all 3-SF oracle-verified before registration.
-#   slots 11-50: freshness rotation — the 40 STALEST oracle-twinned greens
-#     by most-recent-attestation round as of round 12 (computed from the
-#     ledger: tools/attestation.py --stalest 40 --as-of 12, never
-#     hand-curated): the 21 remaining round-4-cohort entries, then the
-#     first 19 of the round-5 cohort, name order within cohort.
-# ---------------------------------------------------------------------------
-
-_R13_WINDOW = [
-    # -- 1-5: round-13 additions / graduations ---------------------------
-    "q_semantic_dedup",
-    "q_pq_topk_lit",
-    "q_ivfpq_topk_lit",
-    "q_substring_dup",
-    "q_substring_scrub",
-    "q_substring_incremental",
-    "q_streaming_substring_ingest",
-    "q_substring_dup_witness",
-    "q_substring_savings_by_source",
-    "q_signature_compact",
-    # -- 11-50: stalest-attestation freshness rotation (round-4 cohort
-    #    tail, then the round-5 cohort head, name order within cohort) ---
-    "q_doc_fingerprint_rolling",
-    "q_embed_neardup",
-    "q_json_extract",
-    "q_lag_lead",
-    "q_lang_id",
-    "q_multimodal_digest",
-    "q_multimodal_frames",
-    "q_null_funcs",
-    "q_partitioned_prune",
-    "q_sample_stratified",
-    "q_scan_csv",
-    "q_snapshot_diff",
-    "q_split_assign",
-    "q_string_funcs",
-    "q_text_quality",
-    "q_text_term_freq",
-    "q_text_tokens",
-    "q_token_count_bpe",
-    "q_window_rank",
-    "q_window_sliding",
-    "q_write_roundtrip",
-    "q_asof_join",
-    "q_bigram_counts",
-    "q_bucketed_join",
-    "q_chunk_dedup",
-    "q_cms_heavy_hitters",
-    "q_date_arith",
-    "q_dedup_exact",
-    "q_dedup_minhash",
-    "q_embed_quantize",
-    "q_funnel_steps",
-    "q_incremental_rollup",
-    "q_json_lines_source",
-    "q_minhash_lsh_pairs",
-    "q_multimodal_chunks",
-    "q_orc_roundtrip",
-    "q_pii_redact",
-    "q_profile_table",
-    "q_range_join",
-    "q_regex_extract",
-]
-
-# ROUND-13 WINDOW reorder (kept for provenance — the ROUND-15 WINDOW at
-# the end of the module is the effective one)
-_r13_rest = [n for n in QUERIES if n not in set(_R13_WINDOW)]
-QUERIES = {n: QUERIES[n] for n in [*_R13_WINDOW, *_r13_rest]}
-
-# ---------------------------------------------------------------------------
-# ROUND-15 WINDOW (the driver's correctness gate = the FIRST 50 entries;
-# ROUND-13 WINDOW reorder above, kept for provenance). Composition (pinned
-# by tests/test_entry_contract.test_driver_window_composition):
-#   slots 1-22: the ATTESTATION-GAP head (r14 VERDICT item 1 / next-round
-#     item 2): every oracle-twinned query whose BODY rides the r14/r15
-#     optimization rewrites but whose newest driver hash predates them —
-#     the connected-components dedup-cluster family (single-scan
-#     symmetrization + fused convergence + r15 checkpoint handoff), the
-#     graph explode rewrites, the cosine norm-hoist family, the
-#     IVF-index write family (hash distribution + r15 hot-cell split),
-#     and the two r15 rewrites (pagerank_int loop hygiene,
-#     mutual-kNN half-pair scoring). A green hash through the changed
-#     code is exactly the attestation the r14 judge flagged as missing.
-#   slots 23-50: freshness rotation — the 28 STALEST oracle-twinned
-#     greens by most-recent-attestation round as of round 14 (computed
-#     from the ledger: tools/attestation.py --stalest --as-of 14 minus
-#     the head members, never hand-curated): the round-5 cohort tail,
-#     then the round-6 cohort head, name order within cohort.
-# ---------------------------------------------------------------------------
-
-_R15_WINDOW = [
-    # -- 1-22: r14/r15-touched, stalest-attested first where it matters -
-    "q_dedup_token_savings",
-    "q_dedup_clusters",
-    "q_dup_cluster_size_dist",
-    "q_dedup_survivorship",
-    "q_cross_source_dups",
-    "q_split_neardup_leaks",
-    "q_leakage_safe_split",
-    "q_local_clustering",
-    "q_triangle_count",
-    "q_cosine_topk",
-    "q_cosine_topk_lsh",
-    "q_knn_label_vote",
-    "q_hard_negatives",
-    "q_negative_samples",
-    "q_ivf_recall_eval",
-    "q_mips_topk",
-    "q_ivf_index_append",
-    "q_ivf_index_compact",
-    "q_cosine_topk_ivf_indexed",
-    "q_streaming_ivf_assign",
-    "q_pagerank_exact",
-    "q_mutual_knn_pairs",
-    # -- 23-50: stalest-attestation freshness rotation (round-5 cohort
-    #    tail, then the round-6 cohort head, name order within cohort) --
-    "q_resample_ffill",
-    "q_runtime_filter_join",
-    "q_salted_join",
-    "q_scd2_merge",
-    "q_schema_evolution",
-    "q_sequence_pack",
-    "q_sessionize",
-    "q_streaming_dedup",
-    "q_streaming_enrich",
-    "q_streaming_session",
-    "q_streaming_sliding",
-    "q_streaming_tumbling",
-    "q_string_agg",
-    "q_surrogate_key_fact",
-    "q_tfidf_topk",
-    "q_try_cast",
-    "q_unpivot",
-    "q_window_session",
-    "q_window_tumbling",
-    "q_word_repetition",
-    "q_ab_ttest",
-    "q_basket_rules",
-    "q_bigram_lift",
-    "q_compact_files",
-    "q_domain_cap",
-    "q_drift_chi2",
-    "q_fuzzy_join",
-    "q_gopher_rules",
-]
-
-# ROUND-15 WINDOW reorder (must be the last statement touching QUERIES —
-# every registration above, including late batches, precedes it)
-_r15_rest = [n for n in QUERIES if n not in set(_R15_WINDOW)]
-QUERIES = {n: QUERIES[n] for n in [*_R15_WINDOW, *_r15_rest]}

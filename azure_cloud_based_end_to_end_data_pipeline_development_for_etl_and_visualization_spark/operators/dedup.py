@@ -969,7 +969,7 @@ def substring_dup_spans_incremental(
       partitioning. MEASURED FASTEST while the artifact is within
       ~20x of the batch's gram count — at the bench's 10:1 geometry
       the alternative's key broadcast costs more than the artifact
-      shuffle it saves (floor-profiled in OPTIMIZATION_r14.md).
+      shuffle it saves.
     - ``"broadcast"``: the artifact is pruned to the batch's own gram
       keys with a broadcast semi-join BEFORE anything shuffles (the
       Bloom pre-filter shape of the big-side-reduction playbook, exact

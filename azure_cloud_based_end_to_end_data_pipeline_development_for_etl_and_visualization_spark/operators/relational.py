@@ -265,7 +265,10 @@ def global_middle_rows(
     per-range ``row_number`` are unchanged, only non-target ranges —
     whose rows cannot hold a target rank — are skipped. ``order_by``
     must be a total order (unique tiebreak), as for
-    :func:`with_global_row_number`."""
+    :func:`with_global_row_number`. ``df`` must be deterministic, as
+    there: the plan evaluates it in two branches (the per-range counts
+    and the target-range probe), and a nondeterministic ``df`` would
+    return silently wrong middle rows."""
     pid = "__gm_pid"
     cols = [F.col(c) for c in order_by]
     tagged = df.repartitionByRange(*cols).withColumn(pid, F.spark_partition_id())
@@ -331,8 +334,10 @@ def with_global_row_number(
     and n) without any un-partitioned data window. ``order_by`` must be a
     total order (include a unique tiebreak column) for rank == row_number
     to hold; equal boundary keys land in one range by the partitioner's
-    binary search, so ties never straddle reducers. ``df`` must come from
-    a deterministic source (the plan evaluates it once per phase)."""
+    binary search, so ties never straddle reducers. ``df`` must be
+    deterministic: the plan evaluates it in two branches (the per-range
+    counts and the numbering), and a nondeterministic ``df`` would number
+    one evaluation's rows with another's offsets."""
     pid = "__gr_pid"
     cols = [F.col(c) for c in order_by]
     tagged = df.repartitionByRange(*cols).withColumn(pid, F.spark_partition_id())

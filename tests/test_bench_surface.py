@@ -50,3 +50,11 @@ def test_workload_calls_still_bind():
     ]
     for fn, args, kwargs in calls:
         inspect.signature(fn).bind(*args, **kwargs)
+
+
+def test_benchmark_catalog_queries_have_oracles():
+    from perfbench.workloads.medallion_refresh import CATALOG_QUERIES
+
+    cat = engine("catalog")["catalog"]
+    missing = [q for q in CATALOG_QUERIES if q not in cat.QUERIES or q not in cat.ORACLES]
+    assert not missing, missing

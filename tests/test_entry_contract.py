@@ -1,7 +1,6 @@
 """Driver-contract meta-tests: __spark_entry__ exposes exactly what the
-grading driver expects, and the whole catalog executes under a session
-with NO engine configs (the driver builds its own plain SparkSession —
-any query needing session state must set it itself)."""
+grading driver expects. Every catalog query is built and executed once,
+by tests/test_hint_audit.py::test_scale_contract_sweep."""
 
 from __future__ import annotations
 
@@ -72,131 +71,10 @@ def test_rows_only_queries_are_the_documented_set():
     }
 
 
-# The 22 oracle-twinned queries whose bodies ride the r14/r15
-# optimization rewrites but whose newest driver hash predated them — the
-# r15 window head (r14 VERDICT item 1: the touched-query attestation
-# gap). Shared between the two window tests below.
-R15_TOUCHED_HEAD = [
-    "q_dedup_token_savings", "q_dedup_clusters", "q_dup_cluster_size_dist",
-    "q_dedup_survivorship", "q_cross_source_dups", "q_split_neardup_leaks",
-    "q_leakage_safe_split", "q_local_clustering", "q_triangle_count",
-    "q_cosine_topk", "q_cosine_topk_lsh", "q_knn_label_vote",
-    "q_hard_negatives", "q_negative_samples", "q_ivf_recall_eval",
-    "q_mips_topk", "q_ivf_index_append", "q_ivf_index_compact",
-    "q_cosine_topk_ivf_indexed", "q_streaming_ivf_assign",
-    "q_pagerank_exact", "q_mutual_knn_pairs",
-]
-
-
-def test_driver_window_composition():
-    """Registry order is load-bearing: the driver's correctness gate
-    checks the FIRST 50 entries of queries(). Pin the round-15 window:
-    slots 1-22 are the r14/r15-TOUCHED oracle-twinned queries whose
-    newest driver hash predates the optimization rewrites they ride
-    (the r14 VERDICT's attestation gap: the CC dedup-cluster family,
-    the graph explode rewrites, the cosine norm-hoist family, the IVF
-    write family, and the r15 pagerank/mutual-kNN rewrites);
-    slots 23-50 are the 28 STALEST oracle-twinned greens by
-    most-recent-attestation round as of round 14, minus the head
-    members (the round-5 cohort tail + the round-6 cohort head, name
-    order within cohort). The pin guards against an accidental reorder
-    silently starving the gate (that is precisely what happened in
-    round 1). As in r13 there is NO rows-only slot: every window entry
-    hash-checks."""
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    window = list(qs)[:50]
-    assert [n for n in window if n not in oracles] == []
-    assert window[:22] == R15_TOUCHED_HEAD
-    stalest_rotation = [
-        # round-5 cohort tail (20, name order)
-        "q_resample_ffill", "q_runtime_filter_join", "q_salted_join",
-        "q_scd2_merge", "q_schema_evolution", "q_sequence_pack",
-        "q_sessionize", "q_streaming_dedup", "q_streaming_enrich",
-        "q_streaming_session", "q_streaming_sliding", "q_streaming_tumbling",
-        "q_string_agg", "q_surrogate_key_fact", "q_tfidf_topk",
-        "q_try_cast", "q_unpivot", "q_window_session",
-        "q_window_tumbling", "q_word_repetition",
-        # round-6 cohort head (8, name order)
-        "q_ab_ttest", "q_basket_rules", "q_bigram_lift",
-        "q_compact_files", "q_domain_cap", "q_drift_chi2",
-        "q_fuzzy_join", "q_gopher_rules",
-    ]
-    assert window[22:50] == stalest_rotation
-    # the r13 window head follows the r15 one (the module-order baseline
-    # under the r15 reorder is the r13 ordering, minus the slots the r15
-    # window pulled forward) — every entry there is driver-green and
-    # stays addressable
-    assert list(qs)[50:53] == ["q_semantic_dedup", "q_pq_topk_lit",
-                               "q_ivfpq_topk_lit"]
-
-
-def test_window_rotation_is_ledger_computed():
-    """The stalest-greens fill (slots 23-50) must be COMPUTED from the
-    ledger, not hand-curated: re-derive it here exactly as the window
-    was built — oracle-twinned, attested, sorted by (most recent green
-    round, name), head members excluded — and require the window tail
-    to be its 28-prefix. The derivation is pinned to the ledger AS OF
-    round-15 composition (rounds <= 14, the cap tools/attestation.py
-    --stalest --as-of 14 applies): the driver writes
-    CORRECTNESS_r15.json before the judge's pytest run, and the
-    freshly-attested rows must not shift this round's already-shipped
-    window."""
-    from tools.attestation import load_ledger
-
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    ledger = load_ledger()
-    stalest = sorted(
-        (max(r for r in v["rounds_green"] if r <= 14), n)
-        for n, v in ledger.items()
-        if n in oracles and any(r <= 14 for r in v["rounds_green"])
-    )
-    expected = [
-        n for _, n in stalest if n not in set(R15_TOUCHED_HEAD)
-    ][:28]
-    assert list(qs)[22:50] == expected
-
-
-def test_window_head_matches_attestation_ledger():
-    """The rotation head is COMPUTED, not hand-curated (r8 VERDICT item
-    9): every catalog query the driver has never attested green must sit
-    inside the current window (or be rows-only, which the window
-    excludes by construction)."""
-    from tools.attestation import load_ledger
-
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    names = list(qs)
-    window = set(names[:50])
-    ledger = load_ledger()
-    this_round_new = set(names) - set(ledger)  # no driver row exists yet
-    unattested = {
-        n for n in names
-        if n in oracles
-        and not ledger.get(n, {}).get("rounds_green")
-    }
-    assert unattested <= window | this_round_new, (
-        sorted(unattested - window - this_round_new)
-    )
-
-
 def test_entry_runs_on_plain_session(spark):
     df = entry_mod.entry(spark)
     assert len(df.columns) > 0
     assert df.count() > 0
-
-
-def test_every_query_executes(spark, sf_dir):
-    """Each catalog entry returns a non-degenerate DataFrame at sf0.001.
-    (Value correctness is tools/check_oracle.py's job; this guards against
-    a rename/regression making the driver's harness error out.)"""
-    failures = []
-    for name, fn in entry_mod.queries().items():
-        try:
-            df = fn(spark, sf_dir)
-            assert df.columns, f"{name}: no columns"
-            df.limit(1).collect()
-        except Exception as ex:  # noqa: BLE001
-            failures.append(f"{name}: {ex}")
-    assert not failures, "\n".join(failures)
 
 
 def test_docs_counts_in_sync():

@@ -11,6 +11,9 @@ scans, driver-created literals, fixed-size sketch artifacts.
 
 A regression (hinting customer/part/orders/lineitem/events/documents/
 embeddings or any unbounded derivation) fails the sweep by name.
+
+``test_scale_contract_sweep`` is the only test that runs every catalog
+query: one build per query, the plan audits, then one execution.
 """
 
 from __future__ import annotations
@@ -18,39 +21,60 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark import (
-    catalog,
-)
+import __spark_entry__ as entry_mod
 from tools.hint_audit import audit_hints, audit_windows
 
-ALL_QUERIES = sorted(catalog.QUERIES)
+QUERIES = entry_mod.queries()
 
-
-# Queries whose plans legitimately contain Python: the multimodal decode
-# boundary (Arrow MapInPandas by design) and the pandas_udf scoring stub.
-PYTHON_EXEMPT = {
-    "q_multimodal_digest", "q_multimodal_features", "q_multimodal_resize",
-    "q_multimodal_frames", "q_multimodal_chunks", "q_multimodal_dedup",
-    "q_text_model_score",
+# The only Python evaluation a catalog plan may carry, per operator: the
+# multimodal decode boundary (Arrow-batched MapInPandas) and the
+# pandas_udf scoring stub. Row-at-a-time Python is allowed nowhere.
+PYTHON_ALLOWED = {
+    "MapInPandas": {
+        "q_multimodal_chunks", "q_multimodal_dedup", "q_multimodal_digest",
+        "q_multimodal_features", "q_multimodal_frames", "q_multimodal_resize",
+    },
+    "ArrowEvalPython": {"q_text_model_score"},
+    "BatchEvalPython": set(),
 }
 
 
-@pytest.mark.parametrize("name", ALL_QUERIES)
+def plan_violations(name, df) -> list[str]:
+    """Every scale-contract violation in the plans of catalog query
+    ``name``: (1) a broadcast hint on a subtree that is not structurally
+    bounded (tools/hint_audit), (2) an unpartitioned Window over a
+    fact-scaling input (a single-reducer sort at 100 TB), and (3) a
+    Python operator in the executed plan that ``PYTHON_ALLOWED`` does not
+    grant to ``name``."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    python = [
+        f"{name}: {op} in the executed plan"
+        for op, allowed in PYTHON_ALLOWED.items()
+        if op in plan and name not in allowed
+    ]
+    return audit_hints(df) + audit_windows(df) + python
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_scale_contract_sweep(spark, sf_dir, name):
-    """One plan build, three catalog-wide contracts: (1) every broadcast
-    hint sits on a structurally bounded subtree (tools/hint_audit), and
-    (2) no row-at-a-time or Arrow Python evaluation in any batch hot
-    path outside the documented multimodal/pandas-udf boundary, and
-    (3) no unpartitioned Window over a fact-scaling input (a
-    single-reducer sort at 100 TB) — r9 VERDICT item 3."""
-    df = catalog.QUERIES[name](spark, sf_dir)
-    violations = audit_hints(df) + audit_windows(df)
+    """The one catalog-wide sweep: build each query once, audit its plans
+    (``plan_violations``), then execute it through ``toPandas()`` — the
+    route tools/check_oracle.py takes — so every column of every row is
+    evaluated."""
+    df = QUERIES[name](spark, sf_dir)
+    violations = plan_violations(name, df)
     assert not violations, "\n".join(violations)
-    if name not in PYTHON_EXEMPT:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, name
-        assert "ArrowEvalPython" not in plan, name
-        assert "MapInPandas" not in plan, name
+    assert len(df.toPandas().columns) > 0, name
+
+
+def test_python_exemptions_are_per_operator(spark):
+    """The canary for the Python audit: a multimodal query may carry
+    MapInPandas, but a row-at-a-time ``F.udf`` under its name MUST still
+    be flagged — the exemption covers one operator, not the query."""
+    plus_one = F.udf(lambda x: x + 1, "long")
+    df = spark.range(3).select(plus_one("id").alias("v"))
+    violations = plan_violations("q_multimodal_digest", df)
+    assert violations == ["q_multimodal_digest: BatchEvalPython in the executed plan"]
 
 
 def test_audit_catches_deliberate_customer_broadcast(spark, sf_dir):

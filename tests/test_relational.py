@@ -1,13 +1,10 @@
-"""Unit tests for the relational operator layer + query catalog smoke."""
+"""Unit tests for the relational operator layer."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark import (
-    catalog,
-)
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.operators import (
     relational as R,
 )
@@ -248,13 +245,6 @@ def test_pareto_frontier_matches_bruteforce(spark):
     got = R.pareto_frontier_2d(base, minimize="cost", maximize="gain")
     assert {r["id"] for r in got.collect()} == want
     assert {900, 901} <= want  # the duplicate pair is mutually safe
-
-
-@pytest.mark.parametrize("name", sorted(catalog.QUERIES))
-def test_catalog_query_runs(spark, sf_dir, name):
-    df = catalog.QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.columns) > 0
 
 
 def test_waterfill_rejects_full_budget(spark):
