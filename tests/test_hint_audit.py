@@ -12,8 +12,9 @@ scans, driver-created literals, fixed-size sketch artifacts.
 A regression (hinting customer/part/orders/lineitem/events/documents/
 embeddings or any unbounded derivation) fails the sweep by name.
 
-``test_scale_contract_sweep`` is the only test that runs every catalog
-query: one build per query, the plan audits, then one execution.
+``test_scale_contract_sweep`` builds and executes every catalog query
+once, through tests/catalog_sweep.run_query; the other catalog-wide
+checks read the same recorded runs.
 """
 
 from __future__ import annotations
@@ -21,50 +22,18 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entry_mod
+from tests.catalog_sweep import QUERIES, plan_violations, run_query
 from tools.hint_audit import audit_hints, audit_windows
-
-QUERIES = entry_mod.queries()
-
-# The only Python evaluation a catalog plan may carry, per operator: the
-# multimodal decode boundary (Arrow-batched MapInPandas) and the
-# pandas_udf scoring stub. Row-at-a-time Python is allowed nowhere.
-PYTHON_ALLOWED = {
-    "MapInPandas": {
-        "q_multimodal_chunks", "q_multimodal_dedup", "q_multimodal_digest",
-        "q_multimodal_features", "q_multimodal_frames", "q_multimodal_resize",
-    },
-    "ArrowEvalPython": {"q_text_model_score"},
-    "BatchEvalPython": set(),
-}
-
-
-def plan_violations(name, df) -> list[str]:
-    """Every scale-contract violation in the plans of catalog query
-    ``name``: (1) a broadcast hint on a subtree that is not structurally
-    bounded (tools/hint_audit), (2) an unpartitioned Window over a
-    fact-scaling input (a single-reducer sort at 100 TB), and (3) a
-    Python operator in the executed plan that ``PYTHON_ALLOWED`` does not
-    grant to ``name``."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    python = [
-        f"{name}: {op} in the executed plan"
-        for op, allowed in PYTHON_ALLOWED.items()
-        if op in plan and name not in allowed
-    ]
-    return audit_hints(df) + audit_windows(df) + python
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_scale_contract_sweep(spark, sf_dir, name):
-    """The one catalog-wide sweep: build each query once, audit its plans
-    (``plan_violations``), then execute it through ``toPandas()`` — the
-    route tools/check_oracle.py takes — so every column of every row is
-    evaluated."""
-    df = QUERIES[name](spark, sf_dir)
-    violations = plan_violations(name, df)
-    assert not violations, "\n".join(violations)
-    assert len(df.toPandas().columns) > 0, name
+    """The catalog-wide scale contract: every query's plans pass
+    ``plan_violations``, and the query executes through ``toPandas()``
+    with at least one column (tests/catalog_sweep.run_query)."""
+    run = run_query(spark, sf_dir, name)
+    assert not run.violations, "\n".join(run.violations)
+    assert run.columns > 0, name
 
 
 def test_python_exemptions_are_per_operator(spark):

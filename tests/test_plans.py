@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark import (
     catalog,
 )
+from tests.catalog_sweep import run_query
 
 
 def plan_of(df) -> str:
@@ -65,6 +66,193 @@ def test_empty_relation_folds_to_local(spark, sf_dir):
 def test_orderby_limit_is_topk_not_global_sort(spark, sf_dir):
     plan = plan_of(catalog.q_orderby_limit(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_star_join",
+        "q_groupby_agg",
+        "q_distinct",
+        "q_dedup_exact",
+        "q_dedup_minhash",
+        "q_dedup_simhash",
+        "q_text_quality",
+        "q_lang_id",
+        "q_ngram_jaccard",
+        "q_cosine_topk",
+        "q_sessionize",
+        "q_asof_join",
+        "q_range_join",
+        "q_window_tumbling",
+        "q_stats_moments",
+        "q_percentile_rank",
+        "q_curation_pipeline",
+        "q_snapshot_diff",
+        "q_data_quality",
+        "q_split_assign",
+        "q_sample_stratified",
+        "q_doc_fingerprint_rolling",
+        "q_token_count_bpe",
+        "q_window_frame",
+        "q_null_safe_join",
+        "q_filter_join_topk",
+        "q_ntile_cume",
+        "q_funnel_steps",
+        "q_word_repetition",
+        "q_tfidf_topk",
+        "q_regex_extract",
+        "q_salted_join",
+        "q_decontaminate",
+        "q_bigram_counts",
+        "q_string_agg",
+        "q_unpivot",
+        "q_date_arith",
+        "q_try_cast",
+        "q_time_travel",
+        "q_multimodal_chunks",
+        "q_pii_redact",
+        "q_chunk_dedup",
+        "q_sequence_pack",
+        "q_profile_table",
+        "q_incremental_rollup",
+        "q_cms_heavy_hitters",
+        # round-6 session-2 batch additions
+        "q_gopher_rules",
+        "q_domain_cap",
+        "q_bigram_lift",
+        "q_mad_outlier",
+        "q_fuzzy_join",
+        "q_rolling_time_window",
+        "q_transition_matrix",
+        "q_corr_matrix",
+        "q_ab_ttest",
+        "q_unigram_perplexity",
+        # round-6 session-3 batch additions
+        "q_linreg",
+        "q_interpolate_linear",
+        "q_last_touch",
+        "q_table_checksum",
+        # round-6 session-4 batch additions
+        "q_linreg_group",
+        "q_char_entropy",
+        # round-6 session-5 batch additions
+        "q_skyline",
+        "q_basket_rules",
+        "q_triangle_count",
+        "q_ohlc_bars",
+        "q_rolling_dau",
+        "q_rolling_dau_hll",
+        "q_semantic_dedup",
+        "q_bigram_perplexity",
+        "q_scd2_asof_lookup",
+        "q_vocab_coverage",
+        "q_degree_distribution",
+        "q_event_path_topk",
+        # round-6 session-6 batch additions
+        "q_prefix_filter_join",
+        "q_token_budget_fill",
+        "q_mixture_waterfill",
+        "q_time_weighted_avg",
+        "q_anova_f",
+        "q_interval_coalesce",
+        "q_scd3_merge",
+        "q_tfidf_cosine_pairs",
+        "q_seasonal_naive_mape",
+        "q_logreg_gd",
+        "q_k_anonymity",
+        "q_epoch_reshard",
+        "q_date_dim",
+        "q_concurrency_sweep",
+        "q_kcore",
+        "q_hard_negatives",
+        "q_negative_samples",
+        "q_label_centroids",
+        "q_gdpr_delete",
+        "q_quarantine_split",
+        # round-7 additions
+        "q_pagerank_exact",
+        "q_split_singleton_agreement",
+        "q_incremental_distinct_exact",
+        "q_ks_test",
+        "q_gini",
+        "q_target_encode_loo",
+        "q_rfm",
+        "q_autocorr",
+        "q_kfold_assign",
+        "q_minhash_containment",
+        "q_benford_check",
+        "q_survival_table",
+        "q_bloom_filter",
+        "q_changepoint",
+        "q_cohort_ltv",
+        "q_audience_overlap",
+        "q_simhash_eval",
+        "q_ab_cuped",
+        "q_lorenz_deciles",
+        "q_order_gaps",
+        "q_readability",
+        "q_weekday_decompose",
+        "q_tokenizer_fertility",
+        "q_mixture_temperature",
+        "q_dataset_card",
+        "q_cross_source_dups",
+        "q_equi_depth_histogram",
+        "q_sax_symbols",
+        "q_join_cardinality_est",
+        "q_lsh_recall_eval",
+        "q_price_index",
+        # round-8 additions (q_streaming_cdc_apply excluded: foreachBatch
+        # runs side-effecting jobs; its batch twin q_cdc_apply is swept;
+        # q_dup_cluster_size_dist / q_lsh_band_sweep excluded for runtime
+        # — their building blocks q_dedup_clusters / q_minhash_lsh_pairs
+        # are already covered)
+        "q_spearman_corr",
+        "q_kruskal_wallis",
+        "q_roc_auc",
+        "q_kendall_tau_daily",
+        "q_herfindahl",
+        "q_winsorized_mean",
+        "q_abc_pareto",
+        "q_mom_growth",
+        "q_ngram_novelty",
+        "q_vocab_overlap_sources",
+        "q_rag_chunk_overlap",
+        "q_reservoir_sample",
+        "q_fifo_match",
+        "q_null_skew_join",
+        "q_funnel_windowed",
+        "q_late_arriving_dim",
+        "q_cumulative_distinct_daily",
+        "q_decile_transition",
+        "q_key_skew_profile",
+        "q_doc_length_histogram",
+        "q_embedding_norm_profile",
+        "q_rolling_slope",
+        "q_seasonality_strength",
+        # round-8 batch 3
+        "q_grouped_median",
+        "q_cohens_kappa",
+        "q_chi2_contingency",
+        "q_ewma_dyadic",
+        "q_max_drawdown",
+        "q_local_clustering",
+        "q_mips_topk",
+        "q_knn_label_vote",
+        "q_revenue_share_filter",
+        "q_above_brand_avg",
+        "q_acf_grid",
+        "q_length_band_filter",
+    ],
+)
+def test_no_python_in_batch_hot_paths(spark, sf_dir, name):
+    """Batch operators must stay JVM-side: no row-at-a-time Python UDFs
+    (BatchEvalPython) and no Pandas UDFs (ArrowEvalPython) anywhere in the
+    relational/dedup/text/similarity plans. Python is allowed only at the
+    multimodal decode boundary (MapInPandas, tested separately)."""
+    python_ops = run_query(spark, sf_dir, name).python_ops
+    assert "BatchEvalPython" not in python_ops
+    assert "ArrowEvalPython" not in python_ops
 
 
 @pytest.mark.parametrize("name", ["q_ngram_jaccard", "q_range_join", "q_embed_neardup"])

@@ -1,13 +1,17 @@
-"""Unit tests for the relational operator layer."""
+"""Unit tests for the relational operator layer + query catalog smoke."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark import (
+    catalog,
+)
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.operators import (
     relational as R,
 )
+from tests.catalog_sweep import run_query
 
 
 def test_project_prunes_scan(spark, sf_dir):
@@ -245,6 +249,13 @@ def test_pareto_frontier_matches_bruteforce(spark):
     got = R.pareto_frontier_2d(base, minimize="cost", maximize="gain")
     assert {r["id"] for r in got.collect()} == want
     assert {900, 901} <= want  # the duplicate pair is mutually safe
+
+
+@pytest.mark.parametrize("name", sorted(catalog.QUERIES))
+def test_catalog_query_runs(spark, sf_dir, name):
+    run = run_query(spark, sf_dir, name)
+    assert run.rows >= 0
+    assert run.columns > 0
 
 
 def test_waterfill_rejects_full_budget(spark):
