@@ -2,10 +2,11 @@
 
 Thin adapter over the engine package's query catalog
 (``azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.catalog``).
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` is compared
+against the matching ``oracle_sql()[name]`` via DuckDB (row-count + schema
++ order-insensitive value-hash) by ``tools/check_oracle.py``. The
+``CORRECTNESS_r{N}.json`` files at the repo root record earlier external
+runs of that check; nothing writes them any more.
 """
 
 from __future__ import annotations

@@ -10,6 +10,14 @@ per-query window). For corpus-vs-corpus at 100 TB, the LSH variant buckets
 both sides by hyperplane sign bits so the join compares only same-bucket
 candidates; recall is tunable via number of planes / probe tables (tested
 in tests/test_similarity.py).
+
+IVF search (:func:`cosine_topk_ivf`) keeps its plan fixed across query
+batches: each batch is fetched once, its probe cells are picked on the
+driver with the same floating-point folds Spark uses, and the (query,
+cell) pairs join the index as a broadcast in-memory relation. The index
+stores each vector's ``norm``, the query reads only the probed cell
+directories (a static partition filter), and each candidate pair costs
+one dot product.
 """
 
 from __future__ import annotations
@@ -17,8 +25,16 @@ from __future__ import annotations
 from functools import reduce
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from ..functions import vectors as V
 
@@ -344,6 +360,28 @@ def load_codebooks(spark, path: str) -> np.ndarray:
     return books
 
 
+def _ivf_rows(
+    df: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str
+) -> DataFrame:
+    """Index rows ``(id, vec, norm, cell)``: the nearest cell (argmax
+    centroid dot, a plan-literal JVM expression) and the vector's norm,
+    stored so no query recomputes it. Hash-distributed by cell before the
+    partitioned write (the lakehouse write.distribution-mode=hash
+    discipline): without it every input partition writes a sliver into
+    every cell directory — n_cells x n_partitions files per generation —
+    and both the write and every later index scan pay per-file overheads
+    (measured at a 160k/64-cell corpus: build 8.9 s -> 4.2 s, 2048 -> 64
+    files, index scan 1.0 s -> 0.1 s; appends fragment worst, measured
+    4.6 s -> 1.3 s per append)."""
+    dots = _centroid_dots(vec_col, centroids)
+    return df.select(
+        F.col(id_col),
+        F.col(vec_col),
+        V.norm(F.col(vec_col)).alias("norm"),
+        (F.array_position(dots, F.array_max(dots)) - 1).alias("cell"),
+    ).repartition("cell")
+
+
 def build_ivf_index(
     corpus: DataFrame,
     centroids: np.ndarray,
@@ -352,28 +390,19 @@ def build_ivf_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Materialize the IVF index: one map-only corpus pass assigns each
-    vector its nearest cell (argmax centroid dot — plan-literal JVM
-    expression) and writes ``(id, vec, cell)`` parquet. This is the
-    build-once half the query path must NOT pay: assigning against
-    n_centroids centroids costs n_centroids dots per vector, which for
-    a small query batch EXCEEDS the |Q| dots/vector of the exact scan —
-    measured at a 160k corpus, inline assignment made IVF slower than
-    brute force (9.1 s vs 7.4 s) while the indexed query path wins.
-    Returns the read-back DataFrame (cell-partitioned scan source)."""
-    dots = _centroid_dots(vec_col, centroids)
-    assigned = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        (F.array_position(dots, F.array_max(dots)) - 1).alias("cell"),
-    )
-    # hash-distribute by cell before the partitioned write (the
-    # lakehouse write.distribution-mode=hash discipline): without it
-    # every input partition writes a sliver into every cell directory —
-    # n_cells x n_partitions files per generation — and both the write
-    # and every later index scan pay per-file overheads (measured at a
-    # 160k/64-cell corpus: build 8.9 s -> 4.2 s, 2048 -> 64 files,
-    # index scan 1.0 s -> 0.1 s).
-    assigned.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(path)
+    vector its nearest cell and writes ``(id, vec, norm, cell)`` parquet,
+    partitioned by cell, with ``norm`` the vector's L2 norm
+    (``functions.vectors.norm``, so the query path scores against it
+    bit-identically). This is the build-once half the query path must NOT
+    pay: assigning against n_centroids centroids costs n_centroids dots
+    per vector, which for a small query batch EXCEEDS the |Q| dots/vector
+    of the exact scan — measured at a 160k corpus, inline assignment made
+    IVF slower than brute force (9.1 s vs 7.4 s) while the indexed query
+    path wins. Returns the read-back DataFrame (cell-partitioned scan
+    source)."""
+    _ivf_rows(corpus, centroids, id_col, vec_col).write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(path)
     return corpus.sparkSession.read.parquet(path)
 
 
@@ -385,8 +414,9 @@ def append_ivf_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Incremental IVF index maintenance: assign ONLY the new batch to
-    the EXISTING (persisted) centroids and APPEND its cell files under
-    the index directory — no retrain, no re-scan of the already-indexed
+    the EXISTING (persisted) centroids and APPEND its cell files (same
+    ``(id, vec, norm, cell)`` rows as :func:`build_ivf_index`) under the
+    index directory — no retrain, no re-scan of the already-indexed
     corpus. This is the vector twin of the incremental dedup ingest
     (operators/dedup.materialized_signatures + the asymmetric banding
     join): a 100 TB corpus grows daily, and re-clustering per batch is
@@ -402,18 +432,79 @@ def append_ivf_index(
     tests/test_round12.py. Returns the read-back DataFrame over the
     whole appended index (cell-partitioned scan source, same shape as
     :func:`build_ivf_index`)."""
-    dots = _centroid_dots(vec_col, centroids)
-    assigned = new_batch.select(
-        F.col(id_col),
-        F.col(vec_col),
-        (F.array_position(dots, F.array_max(dots)) - 1).alias("cell"),
-    )
-    # hash-distribute before the partitioned append (build_ivf_index
-    # rationale — appends fragment worst: ONE file per cell per batch
-    # instead of one per input partition per cell; measured 4.6 s ->
-    # 1.3 s per append at the 160k/64-cell crossover corpus).
-    assigned.repartition("cell").write.mode("append").partitionBy("cell").parquet(path)
+    _ivf_rows(new_batch, centroids, id_col, vec_col).write.mode(
+        "append"
+    ).partitionBy("cell").parquet(path)
     return new_batch.sparkSession.read.parquet(path)
+
+
+def _probe_cells(
+    q: np.ndarray, cents: np.ndarray, n_probe: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per query row of ``q`` (``(n, dim)`` doubles): its L2 norm and the
+    indices of its ``n_probe`` nearest cells (largest centroid dot
+    first, ties to the lower index; clamped to the cell count).
+
+    Both are left folds over the dimensions — the same IEEE operations
+    in the same order as the ``aggregate(zip_with(...))`` fold of
+    ``functions.vectors`` and :func:`_lit_dot_sql` — so they are
+    bit-identical to what Spark computes (``np.dot`` is not: BLAS pairs
+    the summation). The stable sort of the negated dots orders exactly
+    like Spark's ``array_sort(struct(-dot, i))``: NaN last, ``-0.0 ==
+    0.0``, then by index; an all-NaN row therefore probes cells
+    ``0..n_probe-1``, as Spark does for a NULL vector."""
+    dots = np.zeros((q.shape[0], cents.shape[0]))
+    nrm2 = np.zeros(q.shape[0])
+    for j in range(cents.shape[1]):
+        dots = dots + q[:, j, None] * cents[None, :, j]
+        nrm2 = nrm2 + q[:, j] * q[:, j]
+    return np.sqrt(nrm2), np.argsort(-dots, axis=1, kind="stable")[:, :n_probe]
+
+
+def _probe_relation(
+    queries: DataFrame,
+    batch: pa.Table,
+    cents: np.ndarray,
+    id_col: str,
+    vec_col: str,
+    n_probe: int,
+) -> tuple[DataFrame, list[int]]:
+    """The query side of an IVF search as data: one row ``(query_id,
+    q_vec array<double>, q_nrm, cell)`` per query of the fetched
+    ``batch`` and probed cell, in an in-memory relation (no job, exact
+    size statistics), so the search plan does not depend on the
+    centroids; and the sorted probed cells. A NULL vector or element
+    gives Spark NULL dots and a NULL norm: such a query probes cells
+    ``0..n_probe-1`` and scores NULL."""
+    dim = cents.shape[1]
+    vecs = batch.column(vec_col).cast(pa.list_(pa.float64()))
+    rows = vecs.to_pylist()
+    if any(v is not None and len(v) != dim for v in rows):
+        raise ValueError(f"cosine_topk_ivf: query vectors must have {dim} elements")
+    null = np.array([v is None or None in v for v in rows], dtype=bool)
+    q = np.array(
+        [[np.nan] * dim if n else v for v, n in zip(rows, null)], dtype=np.float64
+    ).reshape(len(rows), dim)
+    q_nrm, probes = _probe_cells(q, cents, n_probe)
+    take = pa.array(np.repeat(np.arange(len(rows)), probes.shape[1]))
+    table = pa.table(
+        {
+            "query_id": batch.column(id_col).take(take),
+            "q_vec": vecs.take(take),
+            "q_nrm": pa.array(q_nrm, mask=null).take(take),
+            "cell": pa.array(probes.ravel().astype(np.int32)),
+        }
+    )
+    schema = StructType(
+        [
+            StructField("query_id", queries.schema[id_col].dataType),
+            StructField("q_vec", ArrayType(DoubleType())),
+            StructField("q_nrm", DoubleType()),
+            StructField("cell", IntegerType()),
+        ]
+    )
+    probed = sorted(set(probes.ravel().tolist()))
+    return queries.sparkSession.createDataFrame(table, schema), probed
 
 
 def cosine_topk_ivf(
@@ -441,70 +532,75 @@ def cosine_topk_ivf(
     The DEFAULT ``n_probe=12`` of 16 cells is the measured >=0.9
     operating point (bench.py ann: recall@10 0.93 at 1.48 s vs 1.94 s
     exact at sf0.1 with prewarmed artifacts) — callers chasing speed
-    over recall lower it explicitly; ``F.slice`` clamps, so fewer
-    centroids than the default probe count just means a full probe.
+    over recall lower it explicitly; fewer centroids than the probe
+    count just means a full probe.
+
+    Query path: the batch is fetched once (at most
+    ``DEFAULT_MAX_QUERY_BATCH`` queries, a larger batch raises), each
+    query's probe cells are picked on the driver (:func:`_probe_cells`,
+    bit-identical to Spark's folds) and the (query, cell) pairs join the
+    corpus as a broadcast in-memory relation, so the plan carries no
+    centroid literals. Each candidate pair is scored by one dot against
+    norms computed once per row.
+
     Pass ``centroids`` (a :func:`load_centroids` artifact) to skip
     training, and ``index`` (a :func:`build_ivf_index` DataFrame) to
     skip the per-call cell assignment — with both prewarmed, the query
-    path touches only the probed ~n_probe/n_centroids corpus fraction,
-    which is where IVF actually overtakes the exact scan (inline
-    assignment costs n_centroids dots/vector vs the exact scan's
-    |Q| dots/vector and loses whenever |Q| < n_centroids)."""
+    path reads the stored ``norm`` column and only the probed cell
+    directories (a static ``cell IN (...)`` partition filter), which is
+    where IVF actually overtakes the exact scan (inline assignment costs
+    n_centroids dots/vector vs the exact scan's |Q| dots/vector and
+    loses whenever |Q| < n_centroids)."""
+    if n_probe < 0:
+        raise ValueError(f"cosine_topk_ivf: n_probe must be >= 0 (got {n_probe})")
+    if index is not None and "norm" not in index.columns:
+        raise ValueError(
+            "cosine_topk_ivf: index has no 'norm' column; rebuild it with"
+            " build_ivf_index"
+        )
+    batch = queries.select(id_col, vec_col).limit(DEFAULT_MAX_QUERY_BATCH + 1).toArrow()
+    if batch.num_rows > DEFAULT_MAX_QUERY_BATCH:
+        raise ValueError(
+            f"cosine_topk_ivf: queries side exceeds {DEFAULT_MAX_QUERY_BATCH}"
+            " rows (DEFAULT_MAX_QUERY_BATCH). The query batch is held on the"
+            " driver; split it into smaller batches (query batching is"
+            " embarrassingly parallel)."
+        )
     cents = (
         centroids
         if centroids is not None
         else kmeans_centroids(corpus, id_col, vec_col, n_centroids, n_iters)
     )
-    n_centroids = cents.shape[0]
-
+    qb, probed = _probe_relation(queries, batch, cents, id_col, vec_col, n_probe)
+    # the corpus vector is cast to double once per row, not once per pair
+    c_vec = F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("c_vec")
     if index is not None:
-        cb = index.select(
+        cb = index.filter(F.col("cell").isin(probed)).select(
             F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            V.norm(F.col(vec_col)).alias("c_nrm"),
+            c_vec,
+            F.col("norm").alias("c_nrm"),
             "cell",
         )
     else:
         c_dots = _centroid_dots(vec_col, cents)
         cb = corpus.select(
             F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
+            c_vec,
             V.norm(F.col(vec_col)).alias("c_nrm"),
             (F.array_position(c_dots, F.array_max(c_dots)) - 1).alias("cell"),
         )
 
-    # per-query probe list: indices of the n_probe largest centroid dots
-    q_dots = _centroid_dots(vec_col, cents)
-    probe_cells = F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    q_dots, lambda d, i: F.struct((-d).alias("nd"), i.alias("i"))
-                )
-            ),
-            lambda s: s["i"],
-        ),
-        1,
-        n_probe,
-    )
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        V.norm(F.col(vec_col)).alias("q_nrm"),
-        F.explode(probe_cells).alias("cell"),
-    )
-
-    # per-side norm hoist (the cosine_topk rationale): one fold per
-    # probed pair instead of three, bit-identical values
+    # one fold per candidate pair; the same values as V.dot(q, c) /
+    # (norm(q) * norm(c)) — same products, same fold order, same operands
     scored = (
-        cb.join(qb, "cell")
+        cb.join(F.broadcast(qb), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",
-            (
-                V.dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_nrm") * F.col("c_nrm"))
+            F.expr(
+                "aggregate(zip_with(q_vec, c_vec, (x, y) -> x * y), 0D,"
+                " (acc, x) -> acc + x) / (q_nrm * c_nrm)"
             ).alias("sim"),
         )
     )
@@ -1009,7 +1105,6 @@ def cosine_topk_ivfpq(
         if centroids is not None
         else kmeans_centroids(corpus, id_col, vec_col, n_centroids, n_iters)
     )
-    n_centroids = cents.shape[0]
     n_sub, n_c, sub_dim = codebooks.shape
 
     c_dots = _centroid_dots(vec_col, cents)
@@ -1026,14 +1121,15 @@ def cosine_topk_ivfpq(
         F.array(*code_exprs).alias("pq_code"),
     )
 
+    rows = queries.select(id_col, vec_col).collect()
+    qmat = np.array([r[vec_col] for r in rows], dtype=np.float64).reshape(
+        len(rows), cents.shape[1]
+    )
+    # probe lists from the engine-neutral left folds with a total order
+    # (dot desc, cell asc), which an oracle twin needs
+    q_nrms, probes = _probe_cells(qmat, cents, n_probe)
     lut_rows = []
-    for r in queries.select(id_col, vec_col).collect():
-        q = np.array(r[vec_col], dtype=np.float64)
-        # probe list from engine-neutral fold dots with a TOTAL order
-        # (dot desc, cell asc) — np.argsort over BLAS matvec is neither
-        # bit-stable nor tie-deterministic, which an oracle twin needs
-        cdots = [_fold_dot(cent, q) for cent in cents]
-        probe = sorted(range(len(cents)), key=lambda i: (-cdots[i], i))[:n_probe]
+    for r, q, q_nrm, probe in zip(rows, qmat, q_nrms, probes):
         dlut, nlut = [], []
         for s_i in range(n_sub):
             qs = q[s_i * sub_dim : (s_i + 1) * sub_dim]
@@ -1041,7 +1137,7 @@ def cosine_topk_ivfpq(
                 dlut.append(_fold_dot(qs, c))
                 nlut.append(_fold_dot(c, c))
         for cell in probe:
-            lut_rows.append((int(r[id_col]), int(cell), _fold_norm(q), dlut, nlut))
+            lut_rows.append((int(r[id_col]), int(cell), float(q_nrm), dlut, nlut))
     spark = corpus.sparkSession
     luts = spark.createDataFrame(
         lut_rows,

@@ -9,6 +9,7 @@ recall arithmetic (the shared-wrong-formula guard)."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -26,6 +27,7 @@ from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualiz
 )
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.operators.similarity import (  # noqa: E402
     _hyperplanes,
+    _probe_cells,
     append_ivf_index,
     build_ivf_index,
     cosine_topk,
@@ -359,38 +361,33 @@ def test_compact_zorder_probe_prunes_and_preaggregates(spark, sf_dir):
 
 def test_indexed_ivf_scan_dynamically_prunes_cells(spark, sf_dir):
     """At partial probe, the cell-partitioned index scan must read ONLY
-    the probed cell directories: Catalyst's dynamic partition pruning
-    injects the probe list (a broadcast subquery on the tiny query
-    side) as a PartitionFilter on the index FileScan. This is the
-    100 TB property of the indexed path — the corpus fraction touched
-    is n_probe/n_centroids in FILES, not just in compare count — and a
-    refactor that breaks the equi-join-on-partition-column shape (e.g.
-    probing via a non-partition derived column) would silently turn
-    every query back into a full index scan while staying correct."""
+    the probed cell directories: the probe cells, picked on the driver,
+    reach the index FileScan as a static ``cell IN (...)``
+    PartitionFilter naming exactly those cells. This is the 100 TB
+    property of the indexed path — the corpus fraction touched is
+    n_probe/n_centroids in FILES, not just in compare count — and a
+    refactor that drops the filter or probes via a non-partition derived
+    column would silently turn every query back into a full index scan
+    while staying correct."""
     path = _tmp("dpp_ivf")
     try:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         cents = kmeans_centroids(emb, n_centroids=8, n_iters=1)
         index = build_ivf_index(emb, cents, path)
-        queries = emb.filter(F.col("vec_id") < 5).limit(5)
-        # the assertion only holds when DPP is on — SET the config for
-        # this test (restored below) instead of inheriting it, so an
-        # unrelated session-default change can't fail this test without
-        # a real plan regression
-        dpp_key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-        prev_dpp = spark.conf.get(dpp_key)
-        spark.conf.set(dpp_key, "true")
-        try:
-            df = cosine_topk_ivf(
-                emb, queries, k=10, n_probe=2, centroids=cents, index=index
-            )
-            # case-insensitive, prefix-only match: the exact
-            # 'dynamicpruningexpression(cell...' rendering is a Spark
-            # plan-format detail that varies across versions
-            plan = _plan_of(df).lower()
-            assert "dynamicpruning" in plan, plan[:2000]
-        finally:
-            spark.conf.set(dpp_key, prev_dpp)
+        queries = emb.filter(F.col("vec_id") < 2).limit(2)
+        q = np.array([r.embedding for r in queries.collect()], dtype=np.float64)
+        _, probes = _probe_cells(q, cents, 2)
+        want = set(probes.ravel().tolist())
+        assert len(want) < 8  # a partial probe, so the filter must prune
+        df = cosine_topk_ivf(emb, queries, k=10, n_probe=2, centroids=cents, index=index)
+        scans = [
+            line for line in _plan_of(df).splitlines()
+            if "FileScan" in line and os.path.basename(path) in line
+        ]
+        assert len(scans) == 1, scans
+        filters = re.search(r"PartitionFilters: \[([^\]]*)\]", scans[0]).group(1)
+        named = re.sub(r"cell#\d+", "", filters)
+        assert {int(x) for x in re.findall(r"\d+", named)} == want, filters
     finally:
         shutil.rmtree(path, ignore_errors=True)
 

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import math
+import re
+import uuid
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -383,3 +387,142 @@ def test_pq_rerank_recall_beats_plain_adc(spark, emb):
     plain = recall(S.pq_topk(emb, queries, books, k=5, rerank=None))
     refined = recall(S.pq_topk(emb, queries, books, k=5, rerank=60))
     assert refined >= plain
+
+
+# ---------------------------------------------------------------------------
+# IVF query path: probe cells on the driver
+# ---------------------------------------------------------------------------
+
+
+def _plan_literal_probes(df, cents, n_probe):
+    """Oracle: the plan-literal probe expression the IVF query path used
+    before probes moved to the driver — centroid dots inlined as SQL
+    literals, cells ordered by ``array_sort(struct(-dot, i))``, then
+    ``slice``d to ``n_probe``."""
+
+    def lit_dot(c):
+        arr = "array(" + ",".join(repr(float(x)) + "D" for x in c) + ")"
+        return (
+            "aggregate(zip_with(transform(embedding, x -> cast(x as double)), "
+            f"{arr}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+        )
+
+    dots = F.expr("array(" + ",".join(lit_dot(c) for c in cents) + ")")
+    probes = F.slice(
+        F.transform(
+            F.array_sort(
+                F.transform(dots, lambda d, i: F.struct((-d).alias("nd"), i.alias("i")))
+            ),
+            lambda s: s["i"],
+        ),
+        1,
+        n_probe,
+    )
+    return {r["vec_id"]: list(r["p"]) for r in df.select("vec_id", probes.alias("p")).collect()}
+
+
+def _same_double(a, b):
+    return (a is None and b is None) or (
+        a is not None and b is not None and (a == b or (math.isnan(a) and math.isnan(b)))
+    )
+
+
+def test_driver_probes_equal_plan_literal_probes(spark):
+    """The driver-side probe lists and query norms equal what Spark's
+    folds give, over random vectors, exact dot ties (small integers),
+    duplicated centroids, a NULL embedding, a NULL and a NaN element,
+    and n_probe past the cell count."""
+    rng = np.random.default_rng(5)
+    dim = 8
+    rows = [(i, rng.standard_normal(dim).tolist()) for i in range(40)]
+    rows += [(100 + i, rng.integers(-2, 3, dim).astype(float).tolist()) for i in range(20)]
+    rows += [
+        (200, None),
+        (201, [1.0, None] + [0.5] * (dim - 2)),
+        (202, [float("nan")] + [1.0] * (dim - 1)),
+        (203, [0.0] * dim),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    batch = df.toArrow()
+    real = rng.standard_normal((12, dim))
+    ints = rng.integers(-1, 2, (12, dim)).astype(float)
+    for cents in (
+        np.vstack([real, real[[3, 7]]]),  # cells 12, 13 duplicate 3, 7
+        np.vstack([ints, ints[[0]]]),
+    ):
+        for n_probe in (0, 1, 3, 14, 19):
+            want = _plan_literal_probes(df, cents, n_probe)
+            qb, probed = S._probe_relation(df, batch, cents, "vec_id", "embedding", n_probe)
+            got = {}
+            for r in qb.collect():
+                got.setdefault(r["query_id"], []).append(r["cell"])
+            assert got == {q: p for q, p in want.items() if p}, (n_probe, cents[0])
+            assert probed == sorted({c for p in want.values() for c in p})
+    assert want[200] == want[201] == want[202] == list(range(len(cents)))  # NULL / NaN dots tie
+    norms = {
+        r["vec_id"]: r["n"]
+        for r in df.select("vec_id", S.V.norm(F.col("embedding")).alias("n")).collect()
+    }
+    qb, _ = S._probe_relation(df, batch, cents, "vec_id", "embedding", 1)
+    got_norms = {r["query_id"]: r["q_nrm"] for r in qb.collect()}
+    assert all(_same_double(got_norms[q], n) for q, n in norms.items()), got_norms
+
+
+def test_ivf_query_builds_in_one_job_without_centroid_literals(spark, emb, tmp_path):
+    """Building an indexed search runs one job (the query fetch), and its
+    plan carries the centroids as no literal."""
+    cents = S.kmeans_centroids(emb, n_centroids=8, n_iters=1)
+    index = S.build_ivf_index(emb, cents, str(tmp_path / "idx"))
+    queries = emb.filter(F.col("vec_id") < 4)
+    sc = spark.sparkContext
+    group = f"ivf_build_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build one IVF search")
+    try:
+        df = S.cosine_topk_ivf(emb, queries, k=5, n_probe=3, centroids=cents, index=index)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    def plan_doubles(d):
+        text = d._jdf.queryExecution().optimizedPlan().toString()
+        return {float(x) for x in re.findall(r"-?\d+\.\d+(?:E-?\d+)?", text)}
+
+    lits = set(cents.ravel().tolist())
+    # positive control: the centroid-dot expression renders its literals
+    assert lits <= plan_doubles(emb.select(S._centroid_dots("embedding", cents)))
+    assert not lits & plan_doubles(df)
+
+
+def test_ivf_query_batch_over_cap_raises_before_scoring(spark, tmp_path):
+    """DEFAULT_MAX_QUERY_BATCH + 1 queries raise after the one fetch job,
+    before anything is scored."""
+    n = S.DEFAULT_MAX_QUERY_BATCH + 1
+    queries = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[(F.col("id") % (j + 2)).cast("float") for j in range(4)]).alias("embedding"),
+    )
+    cents = np.eye(4)
+    sc = spark.sparkContext
+    group = f"ivf_cap_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "over-cap IVF batch")
+    try:
+        with pytest.raises(ValueError, match="split it"):
+            S.cosine_topk_ivf(queries, queries, k=2, n_probe=1, centroids=cents)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_ivf_index_without_norm_raises(spark, emb, tmp_path):
+    cents = S.kmeans_centroids(emb, n_centroids=4, n_iters=1)
+    index = S.build_ivf_index(emb, cents, str(tmp_path / "idx")).drop("norm")
+    with pytest.raises(ValueError, match="build_ivf_index"):
+        S.cosine_topk_ivf(emb, emb.limit(2), k=2, n_probe=1, centroids=cents, index=index)
+
+
+def test_ivf_index_stores_vector_norms(spark, emb, tmp_path):
+    """The stored ``norm`` is functions.vectors.norm of the stored vector."""
+    cents = S.kmeans_centroids(emb, n_centroids=4, n_iters=1)
+    index = S.build_ivf_index(emb, cents, str(tmp_path / "idx"))
+    bad = index.filter(~F.col("norm").eqNullSafe(S.V.norm(F.col("embedding")))).count()
+    assert "norm" in index.columns and bad == 0

@@ -25,9 +25,12 @@ Every registered site's bound, by class:
 - **scalar**: 1-row aggregates (HWM max-ts, corpus max-norm M²);
 - **k-sized**: k-means centroid matrices, PQ codebooks, per-merge-round
   argmax rows — bounded by a model-size parameter, never by rows;
-- **query-batch**: the PQ/IVFPQ/MIPS lookup-table builds — bounded by
-  ``max_query_batch`` (default 8192) enforced by
-  ``_require_bounded_queries`` BEFORE the collect runs;
+- **query-batch**: a query batch held on the driver, in one of two forms:
+  count-then-collect (the PQ/IVFPQ/MIPS lookup-table builds, where
+  ``_require_bounded_queries`` counts under ``limit(max_query_batch + 1)``,
+  default 8192, BEFORE the collect runs) or fetch-then-check (the IVF
+  probe batch, fetched under ``limit(DEFAULT_MAX_QUERY_BATCH + 1)`` and
+  raised past the cap);
 - **domain-bounded**: histograms over value domains (price cents);
 - **batch-bounded**: an incremental batch held on the driver, capped by
   ``plans.medallion.DRIVER_BATCH_ROWS`` before the rest of it is fetched.
@@ -131,6 +134,11 @@ REGISTRY: dict[tuple[str, str], tuple[int, str]] = {
         1,
         "query-batch: LUT build over queries, capped by "
         "max_query_batch via _require_bounded_queries before the collect",
+    ),
+    ("operators/similarity.py", "cosine_topk_ivf"): (
+        1,
+        "query-batch: fetched under limit(DEFAULT_MAX_QUERY_BATCH + 1), "
+        "raised past the cap",
     ),
     ("operators/similarity.py", "cosine_topk_ivfpq"): (
         1,
