@@ -982,10 +982,11 @@ def substring_dup_spans_incremental(
       per-ingest cost stays O(|batch|) while ``"join"`` re-shuffles the
       corpus-sized artifact every batch (the bench's substring_dedup
       section measures the crossover). ``max_batch_grams`` count-guards
-      the key broadcast (the _require_bounded_queries discipline); at
-      key volumes past broadcastability, swap the broadcast for a Bloom
-      filter over the batch grams — false positives only let a few
-      extra artifact rows through and cannot change a dup verdict.
+      the key broadcast, as the similarity searches cap their query
+      batch at ``MAX_QUERY_BATCH``; at key volumes past
+      broadcastability, swap the broadcast for a Bloom filter over the
+      batch grams — false positives only let a few extra artifact rows
+      through and cannot change a dup verdict.
     """
     if probe not in ("join", "broadcast"):
         raise ValueError(
@@ -1011,8 +1012,8 @@ def substring_dup_spans_incremental(
         # tokenize->shingle pipeline once, not four times
         grams = grams.localCheckpoint(eager=False)
         # fail fast if the "batch" is not actually batch-sized: its
-        # gram keys are broadcast below (the _require_bounded_queries
-        # discipline — a corpus-sized incoming frame belongs on the
+        # gram keys are broadcast below (a broadcast side must stay
+        # batch-sized — a corpus-sized incoming frame belongs on the
         # full-recompute or probe="join" path). The count doubles as
         # the checkpoint materializer.
         cap = int(max_batch_grams)

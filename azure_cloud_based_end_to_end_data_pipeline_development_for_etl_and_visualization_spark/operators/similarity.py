@@ -11,18 +11,24 @@ both sides by hyperplane sign bits so the join compares only same-bucket
 candidates; recall is tunable via number of planes / probe tables (tested
 in tests/test_similarity.py).
 
-IVF search (:func:`cosine_topk_ivf`) keeps its plan fixed across query
-batches: each batch is fetched once, its probe cells are picked on the
-driver with the same floating-point folds Spark uses, and the (query,
-cell) pairs join the index as a broadcast in-memory relation. The index
-stores each vector's ``norm``, the query reads only the probed cell
-directories (a static partition filter), and each candidate pair costs
-one dot product.
+Every search that scores a query batch (:func:`cosine_topk`,
+:func:`hard_negatives`, :func:`pq_topk`, :func:`cosine_topk_ivfpq`,
+:func:`mips_topk`, :func:`cosine_topk_ivf`) holds that batch on the
+driver: it is fetched once by :func:`_fetch_queries` (at most
+``MAX_QUERY_BATCH`` rows; one job, checked for length and NULLs) and
+re-enters the plan as a broadcast in-memory relation — the batch itself,
+its probe lists or its lookup tables — so no search reads ``queries``
+twice. Probe cells are picked on the driver with the same floating-point
+folds Spark uses (:func:`_probe_cells`), so IVF plans stay fixed across
+query batches. The IVF index stores each vector's ``norm``, the query
+reads only the probed cell directories (a static partition filter), and
+each candidate pair costs one dot product.
 """
 
 from __future__ import annotations
 
 from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -38,48 +44,85 @@ from pyspark.sql.types import (
 
 from ..functions import vectors as V
 
-# Driver-side budget for the QUERY side of the search APIs below. The
-# corpus side always stays distributed, but queries are either collected
-# (PQ/IVFPQ lookup tables: |Q| x n_sub x n_centroids doubles) or
-# broadcast whole (the exact brute-force rungs) — so a fact-sized
-# queries DataFrame is a driver/executor OOM, the exact failure class
-# threshold_pairs' ``allow_full_cross`` guards one function over. At the
-# default cap the collected LUT state is ~16 MB (8192 queries x 128
-# doubles x 16 B) — comfortably driver-sized; callers with bigger
-# retrieval batches split them (the batching is embarrassingly parallel
-# across query splits) or override explicitly.
-DEFAULT_MAX_QUERY_BATCH = 8192
+# The largest query batch a search holds on the driver. Every search below
+# that scores a query batch fetches it once (:func:`_fetch_queries`) and
+# broadcasts it, or the lookup tables / probe lists built from it, whole;
+# the corpus side stays distributed. At the cap, PQ lookup tables are
+# ~16 MB (8192 queries x 128 doubles x 16 B). Bigger retrieval batches
+# are split by the caller (query batching is embarrassingly parallel).
+MAX_QUERY_BATCH = 8192
 
 
-def _require_bounded_queries(
+class _QueryBatch(NamedTuple):
+    """A query batch held on the driver (see :func:`_fetch_queries`)."""
+
+    rows: pa.Table  # the fetched (id, vector, *extra) columns
+    q: np.ndarray  # (n, dim) doubles; a NaN row where the vector is or holds NULL
+    null: np.ndarray  # per row: the vector is or holds NULL
+    frame: DataFrame  # queries.select(id, vector, *extra), for its schema
+
+    def relation(self) -> DataFrame:
+        """The fetched rows as an in-memory relation with the queries'
+        schema: no job, exact size statistics, no second read of the
+        queries."""
+        return self.frame.sparkSession.createDataFrame(self.rows, self.frame.schema)
+
+
+def _fetch_queries(
     queries: DataFrame,
     fn_name: str,
-    max_query_batch: int,
-    allow_full_cross: bool,
-) -> None:
-    """Fail fast if the queries side exceeds the driver-side budget.
+    id_col: str,
+    vec_col: str,
+    dim: int | None = None,
+    nulls: bool = True,
+    extra: tuple[str, ...] = (),
+) -> _QueryBatch:
+    """Fetch a search's query batch once, under ``limit(MAX_QUERY_BATCH +
+    1)`` (one job), and check it. A ``ValueError`` naming ``fn_name`` is
+    raised for a batch past the cap, for a vector whose length is not
+    ``dim`` (without ``dim``: not the batch's shortest length), and,
+    unless ``nulls``, for a NULL vector or element."""
+    frame = queries.select(id_col, vec_col, *extra)
+    rows = frame.limit(MAX_QUERY_BATCH + 1).toArrow()
+    if rows.num_rows > MAX_QUERY_BATCH:
+        raise ValueError(
+            f"{fn_name}: queries side exceeds {MAX_QUERY_BATCH} rows"
+            " (MAX_QUERY_BATCH). The query batch is held on the driver;"
+            " split it into smaller batches (query batching is"
+            " embarrassingly parallel)."
+        )
+    vecs = rows.column(vec_col).to_pylist()
+    null = np.array([v is None or None in v for v in vecs], dtype=bool)
+    if not nulls and null.any():
+        raise ValueError(f"{fn_name}: query vectors must not be or hold NULL")
+    lengths = {len(v) for v in vecs if v is not None}
+    if dim is None:
+        dim = min(lengths, default=0)
+    if lengths - {dim}:
+        raise ValueError(
+            f"{fn_name}: query vectors must have {dim} elements"
+            f" (got lengths {sorted(lengths)})"
+        )
+    q = np.array(
+        [[np.nan] * dim if n else v for v, n in zip(vecs, null)], dtype=np.float64
+    ).reshape(len(vecs), dim)
+    return _QueryBatch(rows, q, null, frame)
 
-    Cost: one ``limit(cap + 1).count()`` job — bounded by the cap, never
-    a full scan of a fact-sized input (the limit short-circuits)."""
-    if allow_full_cross:
-        return
-    cap = int(max_query_batch)
-    if cap <= 0:
-        raise ValueError(
-            f"{fn_name}: max_query_batch must be positive (got "
-            f"{max_query_batch}); pass allow_full_cross=True to disable "
-            "the query-batch guard entirely"
-        )
-    if queries.limit(cap + 1).count() > cap:
-        raise ValueError(
-            f"{fn_name}: queries side exceeds max_query_batch={cap} rows."
-            " The query batch is collected/broadcast driver-side (the"
-            " corpus side stays distributed), so a fact-sized queries"
-            " DataFrame would OOM the driver at scale. Split the batch"
-            " (query batching is embarrassingly parallel), raise"
-            " max_query_batch deliberately, or pass allow_full_cross=True"
-            " to override explicitly."
-        )
+
+def _top_k(
+    scored: DataFrame, k: int, score: str = "sim", extra: tuple[str, ...] = ()
+) -> DataFrame:
+    """Each query's ``k`` best rows of ``scored`` by ``score`` (ties to
+    the lower ``neighbor_id``), ranked from 1: ``(query_id, neighbor_id,
+    *extra, rank, score)``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", *extra, "rank", score)
+    )
 
 
 def cosine_topk(
@@ -88,31 +131,27 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    max_query_batch: int = DEFAULT_MAX_QUERY_BATCH,
-    allow_full_cross: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine similarity.
 
     Output: (query_id, neighbor_id, rank, sim). Self-matches excluded.
     Plan: broadcast(queries) x corpus -> cosine expr (JVM, no UDF) ->
-    row_number window partitioned by query.
-
-    The queries side is BROADCAST whole, so it is count-guarded to
-    ``max_query_batch`` rows (default 8192); a bigger batch raises unless
-    ``allow_full_cross=True`` is passed explicitly — the same discipline
-    as :func:`threshold_pairs`."""
-    _require_bounded_queries(
-        queries, "cosine_topk", max_query_batch, allow_full_cross
-    )
+    row_number window partitioned by query. The query batch is fetched
+    once (:func:`_fetch_queries`, at most ``MAX_QUERY_BATCH`` rows) and
+    broadcast as an in-memory relation."""
     # norms fold ONCE per side row instead of once per PAIR inside
     # cosine() — 3 interpreted array folds per pair drop to 1 (the
     # q_mutual_knn_pairs hoist, measured 11.4 s -> ~4 s there).
     # Bit-identical: same left-to-right folds, same (q_nrm * c_nrm)
     # operand order as cosine(q_vec, c_vec)'s norm(q) * norm(c).
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        V.norm(F.col(vec_col)).alias("q_nrm"),
+    q = (
+        _fetch_queries(queries, "cosine_topk", id_col, vec_col)
+        .relation()
+        .select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("q_vec"),
+            V.norm(F.col(vec_col)).alias("q_nrm"),
+        )
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -131,14 +170,7 @@ def cosine_topk(
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 def threshold_pairs(
@@ -147,51 +179,41 @@ def threshold_pairs(
     vec_col: str = "embedding",
     block_col: str | None = "label",
     threshold: float = 0.35,
-    allow_full_cross: bool = False,
 ) -> DataFrame:
     """Embedding near-duplicate pairs: cosine >= threshold, blocked on a
     grouping column (cuts the pair space from n^2 to sum of per-block
     n_b^2 — the standard blocking trick).
 
-    ``block_col=None`` is an unblocked corpus x corpus crossJoin —
-    quadratic, a non-starter beyond toy corpora — so it raises unless
-    ``allow_full_cross=True`` is passed explicitly (mirrors range_join's
-    guard against accidental nested-loop plans). For an unblocked corpus,
+    There is no unblocked form: ``block_col=None`` would be a quadratic
+    corpus x corpus crossJoin, so it raises. For an unblocked corpus,
     derive a blocking key first: ``lsh_bucket`` from this module gives a
     plan-literal hyperplane bucket that serves exactly this purpose."""
-    if block_col is None and not allow_full_cross:
+    if block_col is None:
         raise ValueError(
-            "threshold_pairs(block_col=None) is an n^2 crossJoin; pass a "
-            "blocking column (e.g. lsh_bucket(...) output) or opt in "
-            "explicitly with allow_full_cross=True"
+            "threshold_pairs: block_col=None would be an n^2 crossJoin; pass"
+            " a blocking column, e.g. the lsh_bucket(...) output"
         )
     # per-side norm hoist (the cosine_topk rationale): one fold per
     # pair instead of three, bit-identical values
-    a_cols = [
+    a = corpus.select(
+        F.col(block_col).alias("blk"),
         F.col(id_col).alias("a"),
         F.col(vec_col).alias("va"),
         V.norm(F.col(vec_col)).alias("__na"),
-    ]
-    b_cols = [
+    )
+    b = corpus.select(
+        F.col(block_col).alias("blk"),
         F.col(id_col).alias("b"),
         F.col(vec_col).alias("vb"),
         V.norm(F.col(vec_col)).alias("__nb"),
-    ]
-    if block_col:
-        a = corpus.select(F.col(block_col).alias("blk"), *a_cols)
-        b = corpus.select(F.col(block_col).alias("blk"), *b_cols)
-        joined = a.join(b, "blk").filter(F.col("a") < F.col("b"))
-    else:
-        joined = (
-            corpus.select(*a_cols)
-            .crossJoin(corpus.select(*b_cols))
-            .filter(F.col("a") < F.col("b"))
-        )
+    )
     sim = V.dot(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb"))
-    out_cols = ["a", "b", sim.alias("sim")]
-    if block_col:
-        out_cols = [F.col("blk").alias(block_col), *out_cols]
-    return joined.select(*out_cols).filter(F.col("sim") >= threshold)
+    return (
+        a.join(b, "blk")
+        .filter(F.col("a") < F.col("b"))
+        .select(F.col("blk").alias(block_col), "a", "b", sim.alias("sim"))
+        .filter(F.col("sim") >= threshold)
+    )
 
 
 def _hyperplanes(n_planes: int, dim: int, seed: int = 7) -> np.ndarray:
@@ -438,6 +460,15 @@ def append_ivf_index(
     return new_batch.sparkSession.read.parquet(path)
 
 
+def _fold_norms(q: np.ndarray) -> np.ndarray:
+    """L2 norm of each row of ``q`` (``(n, dim)`` doubles) as a left fold
+    over the dimensions, bit-identical to ``functions.vectors.norm``."""
+    nrm2 = np.zeros(q.shape[0])
+    for j in range(q.shape[1]):
+        nrm2 = nrm2 + q[:, j] * q[:, j]
+    return np.sqrt(nrm2)
+
+
 def _probe_cells(
     q: np.ndarray, cents: np.ndarray, n_probe: int
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -454,57 +485,45 @@ def _probe_cells(
     0.0``, then by index; an all-NaN row therefore probes cells
     ``0..n_probe-1``, as Spark does for a NULL vector."""
     dots = np.zeros((q.shape[0], cents.shape[0]))
-    nrm2 = np.zeros(q.shape[0])
     for j in range(cents.shape[1]):
         dots = dots + q[:, j, None] * cents[None, :, j]
-        nrm2 = nrm2 + q[:, j] * q[:, j]
-    return np.sqrt(nrm2), np.argsort(-dots, axis=1, kind="stable")[:, :n_probe]
+    return _fold_norms(q), np.argsort(-dots, axis=1, kind="stable")[:, :n_probe]
 
 
 def _probe_relation(
-    queries: DataFrame,
-    batch: pa.Table,
+    b: _QueryBatch,
     cents: np.ndarray,
     id_col: str,
     vec_col: str,
     n_probe: int,
 ) -> tuple[DataFrame, list[int]]:
     """The query side of an IVF search as data: one row ``(query_id,
-    q_vec array<double>, q_nrm, cell)`` per query of the fetched
-    ``batch`` and probed cell, in an in-memory relation (no job, exact
-    size statistics), so the search plan does not depend on the
-    centroids; and the sorted probed cells. A NULL vector or element
-    gives Spark NULL dots and a NULL norm: such a query probes cells
-    ``0..n_probe-1`` and scores NULL."""
-    dim = cents.shape[1]
-    vecs = batch.column(vec_col).cast(pa.list_(pa.float64()))
-    rows = vecs.to_pylist()
-    if any(v is not None and len(v) != dim for v in rows):
-        raise ValueError(f"cosine_topk_ivf: query vectors must have {dim} elements")
-    null = np.array([v is None or None in v for v in rows], dtype=bool)
-    q = np.array(
-        [[np.nan] * dim if n else v for v, n in zip(rows, null)], dtype=np.float64
-    ).reshape(len(rows), dim)
-    q_nrm, probes = _probe_cells(q, cents, n_probe)
-    take = pa.array(np.repeat(np.arange(len(rows)), probes.shape[1]))
+    q_vec array<double>, q_nrm, cell)`` per query of the fetched batch
+    and cell probed by ``b.q`` (:func:`_probe_cells`), in an in-memory
+    relation (no job, exact size statistics), so the search plan does
+    not depend on the centroids; and the sorted probed cells. A NULL
+    vector or element gives Spark NULL dots and a NULL norm: such a
+    query probes cells ``0..n_probe-1`` and scores NULL."""
+    q_nrm, probes = _probe_cells(b.q, cents, n_probe)
+    take = pa.array(np.repeat(np.arange(len(b.q)), probes.shape[1]))
     table = pa.table(
         {
-            "query_id": batch.column(id_col).take(take),
-            "q_vec": vecs.take(take),
-            "q_nrm": pa.array(q_nrm, mask=null).take(take),
+            "query_id": b.rows.column(id_col).take(take),
+            "q_vec": b.rows.column(vec_col).cast(pa.list_(pa.float64())).take(take),
+            "q_nrm": pa.array(q_nrm, mask=b.null).take(take),
             "cell": pa.array(probes.ravel().astype(np.int32)),
         }
     )
     schema = StructType(
         [
-            StructField("query_id", queries.schema[id_col].dataType),
+            StructField("query_id", b.frame.schema[id_col].dataType),
             StructField("q_vec", ArrayType(DoubleType())),
             StructField("q_nrm", DoubleType()),
             StructField("cell", IntegerType()),
         ]
     )
     probed = sorted(set(probes.ravel().tolist()))
-    return queries.sparkSession.createDataFrame(table, schema), probed
+    return b.frame.sparkSession.createDataFrame(table, schema), probed
 
 
 def cosine_topk_ivf(
@@ -535,13 +554,13 @@ def cosine_topk_ivf(
     over recall lower it explicitly; fewer centroids than the probe
     count just means a full probe.
 
-    Query path: the batch is fetched once (at most
-    ``DEFAULT_MAX_QUERY_BATCH`` queries, a larger batch raises), each
-    query's probe cells are picked on the driver (:func:`_probe_cells`,
-    bit-identical to Spark's folds) and the (query, cell) pairs join the
-    corpus as a broadcast in-memory relation, so the plan carries no
-    centroid literals. Each candidate pair is scored by one dot against
-    norms computed once per row.
+    Query path: the batch is fetched once (:func:`_fetch_queries`, at
+    most ``MAX_QUERY_BATCH`` queries), each query's probe cells are
+    picked on the driver (:func:`_probe_cells`, bit-identical to Spark's
+    folds) and the (query, cell) pairs join the corpus as a broadcast
+    in-memory relation, so the plan carries no centroid literals. Each
+    candidate pair is scored by one dot against norms computed once per
+    row.
 
     Pass ``centroids`` (a :func:`load_centroids` artifact) to skip
     training, and ``index`` (a :func:`build_ivf_index` DataFrame) to
@@ -558,20 +577,13 @@ def cosine_topk_ivf(
             "cosine_topk_ivf: index has no 'norm' column; rebuild it with"
             " build_ivf_index"
         )
-    batch = queries.select(id_col, vec_col).limit(DEFAULT_MAX_QUERY_BATCH + 1).toArrow()
-    if batch.num_rows > DEFAULT_MAX_QUERY_BATCH:
-        raise ValueError(
-            f"cosine_topk_ivf: queries side exceeds {DEFAULT_MAX_QUERY_BATCH}"
-            " rows (DEFAULT_MAX_QUERY_BATCH). The query batch is held on the"
-            " driver; split it into smaller batches (query batching is"
-            " embarrassingly parallel)."
-        )
     cents = (
         centroids
         if centroids is not None
         else kmeans_centroids(corpus, id_col, vec_col, n_centroids, n_iters)
     )
-    qb, probed = _probe_relation(queries, batch, cents, id_col, vec_col, n_probe)
+    b = _fetch_queries(queries, "cosine_topk_ivf", id_col, vec_col, cents.shape[1])
+    qb, probed = _probe_relation(b, cents, id_col, vec_col, n_probe)
     # the corpus vector is cast to double once per row, not once per pair
     c_vec = F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("c_vec")
     if index is not None:
@@ -604,14 +616,7 @@ def cosine_topk_ivf(
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 def cosine_topk_lsh(
@@ -691,14 +696,7 @@ def cosine_topk_lsh(
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -745,11 +743,13 @@ def quantize_embeddings(
 def _fold_dot(a, b) -> float:
     """Sequential left-fold dot product over IEEE doubles — the SAME
     accumulation order as functions.vectors.dot's ``aggregate`` fold and
-    DuckDB's ``list_sum(list_transform(...))``, so driver-side LUT values
-    are bit-identical to what either engine would compute. ``np.dot``
-    is NOT engine-neutral here: BLAS ddot unrolls/pairs the summation,
-    which can differ in the last ulp from the left fold — enough to flip
-    a rank tie and break a cross-engine hash."""
+    DuckDB's ``list_sum(list_transform(...))``, and the scalar form of
+    the batch folds in :func:`_fold_norms`, :func:`_probe_cells` and
+    :func:`_adc_luts`, so driver-side values are bit-identical to what
+    either engine would compute. ``np.dot`` is NOT engine-neutral here:
+    BLAS ddot unrolls/pairs the summation, which can differ in the last
+    ulp from the left fold — enough to flip a rank tie and break a
+    cross-engine hash."""
     s = 0.0
     for x, y in zip(a, b):
         s += float(x) * float(y)
@@ -879,6 +879,20 @@ def pq_train(
     return books
 
 
+def _pq_code(codebooks: np.ndarray, vec_col: str) -> "F.Column":
+    """The ``n_sub`` centroid ids of a vector as an ``array<int>`` — the
+    per-subspace squared-L2 argmax over codeword literals."""
+    n_sub, _n_c, sub_dim = codebooks.shape
+    codes = []
+    for s_i in range(n_sub):
+        sub_sql = f"slice({vec_col}, {s_i * sub_dim + 1}, {sub_dim})"
+        scores = _pq_assign_scores(sub_sql, codebooks[s_i])
+        codes.append(
+            (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
+        )
+    return F.array(*codes)
+
+
 def pq_encode(
     df: DataFrame,
     codebooks: np.ndarray,
@@ -891,15 +905,7 @@ def pq_encode(
     the scan). Pure JVM expressions — the codebooks are plan literals, no
     UDF, no shuffle; at 100 TB this is a map-only re-write of the
     embedding column into a code column."""
-    n_sub, _n_c, sub_dim = codebooks.shape
-    codes = []
-    for s_i in range(n_sub):
-        sub_sql = f"slice({vec_col}, {s_i * sub_dim + 1}, {sub_dim})"
-        scores = _pq_assign_scores(sub_sql, codebooks[s_i])
-        codes.append(
-            (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-        )
-    return df.select(F.col(id_col), F.array(*codes).alias(out_col))
+    return df.select(F.col(id_col), _pq_code(codebooks, vec_col).alias(out_col))
 
 
 def _exact_rerank(
@@ -916,7 +922,8 @@ def _exact_rerank(
     them, so recall@k jumps to ~recall@R of the coarse stage while
     exact scoring touches R x |Q| vectors instead of |C| x |Q|. The
     shortlist re-attaches true vectors via two id-equi-joins (query
-    side broadcast — it is query-batch-sized)."""
+    side broadcast: ``queries`` is the fetched batch's in-memory
+    relation)."""
     rescored = (
         shortlist.select("query_id", "neighbor_id")
         .join(
@@ -946,14 +953,67 @@ def _exact_rerank(
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
+    return _top_k(rescored, k)
+
+
+def _adc_luts(
+    b: _QueryBatch,
+    id_col: str,
+    codebooks: np.ndarray,
+    probes: np.ndarray | None = None,
+) -> DataFrame:
+    """The query side of an ADC search as data: one row ``(query_id,
+    [cell,] qnorm, dlut, nlut)`` per query of the fetched batch (per
+    query and probed cell with ``probes``) in an in-memory relation.
+    ``dlut[s * n_c + c]`` is the dot of the query's subvector ``s`` with
+    codeword ``c`` and ``nlut`` holds the codewords' squared norms; all
+    are left folds like :func:`_fold_dot`, so a DuckDB oracle recomputes
+    them bit-exactly (q_pq_topk_lit)."""
+    n_sub, n_c, sub_dim = codebooks.shape
+    n = len(b.q)
+    qs = b.q.reshape(n, n_sub, 1, sub_dim)
+    dlut = np.zeros((n, n_sub, n_c))
+    nlut = np.zeros((n_sub, n_c))
+    for j in range(sub_dim):
+        dlut = dlut + qs[..., j] * codebooks[None, :, :, j]
+        nlut = nlut + codebooks[:, :, j] * codebooks[:, :, j]
+    per = 1 if probes is None else probes.shape[1]
+    take = np.repeat(np.arange(n), per)
+    width = n_sub * n_c
+    offsets = pa.array(np.arange(len(take) + 1, dtype=np.int32) * width)
+    cols = {"query_id": b.rows.column(id_col).cast(pa.int64()).take(pa.array(take))}
+    if probes is not None:
+        cols["cell"] = pa.array(probes.ravel().astype(np.int64))
+    cols["qnorm"] = pa.array(_fold_norms(b.q)[take])
+    cols["dlut"] = pa.ListArray.from_arrays(
+        offsets, pa.array(dlut.reshape(n, width)[take].ravel())
     )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
+    cols["nlut"] = pa.ListArray.from_arrays(
+        offsets, pa.array(np.tile(nlut.ravel(), len(take)))
     )
+    schema = (
+        "query_id long, "
+        + ("cell long, " if probes is not None else "")
+        + "qnorm double, dlut array<double>, nlut array<double>"
+    )
+    return b.frame.sparkSession.createDataFrame(pa.table(cols), schema)
+
+
+def _adc_sim(n_sub: int, n_c: int) -> "F.Column":
+    """ADC cosine of an ``_adc_luts`` row against a ``pq_code``:
+    ``sum_s dlut[s][code_s] / (qnorm * sqrt(sum_s nlut[s][code_s]))``,
+    each sum a left-fold gather."""
+    idx = F.sequence(F.lit(0), F.lit(n_sub - 1))
+
+    def _gather(lut):
+        picked = F.zip_with(
+            F.col("pq_code"),
+            idx,
+            lambda c, s: F.element_at(lut, s * F.lit(n_c) + c + 1),
+        )
+        return F.aggregate(picked, F.lit(0.0), lambda a, x: a + x)
+
+    return _gather(F.col("dlut")) / (F.col("qnorm") * F.sqrt(_gather(F.col("nlut"))))
 
 
 def pq_topk(
@@ -965,14 +1025,12 @@ def pq_topk(
     k: int = 10,
     rerank: int | None = 100,
     codes: DataFrame | None = None,
-    max_query_batch: int = DEFAULT_MAX_QUERY_BATCH,
-    allow_full_cross: bool = False,
 ) -> DataFrame:
     """Approximate cosine top-k by asymmetric distance computation (ADC):
     queries stay exact, corpus vectors are approximated by their PQ
     reconstruction; ``dot(q, x) ~= sum_s dlut[s][code_s]`` where the
-    per-query lookup tables are precomputed once (|Q| x n_sub x
-    n_centroids doubles, driver-sized) and broadcast.
+    per-query lookup tables are precomputed once on the driver (|Q| x
+    n_sub x n_centroids doubles, :func:`_adc_luts`) and broadcast.
 
     Scale shape: the candidate space is still |Q| x |C| (compose with
     ``cosine_topk_ivf``'s cell pruning for sub-linear candidates), but
@@ -995,67 +1053,22 @@ def pq_topk(
     batch (encoding costs n_sub x n_centroids sub-dots per vector — a
     build-once cost, same argument as :func:`build_ivf_index`).
 
-    The per-query lookup tables are COLLECTED driver-side, so the
-    queries side is count-guarded to ``max_query_batch`` rows (default
-    8192, ~16 MB of LUT doubles); a bigger batch raises unless
-    ``allow_full_cross=True`` is passed explicitly."""
-    _require_bounded_queries(
-        queries, "pq_topk", max_query_batch, allow_full_cross
-    )
+    The query batch is fetched once (:func:`_fetch_queries`, at most
+    ``MAX_QUERY_BATCH`` queries of the codebooks' length, none NULL)."""
     n_sub, n_c, sub_dim = codebooks.shape
-    spark = corpus.sparkSession
+    b = _fetch_queries(queries, "pq_topk", id_col, vec_col, n_sub * sub_dim, nulls=False)
     if codes is None:
         codes = pq_encode(corpus, codebooks, id_col, vec_col)
-
-    lut_rows = []
-    for r in queries.select(id_col, vec_col).collect():
-        q = np.array(r[vec_col], dtype=np.float64)
-        dlut, nlut = [], []
-        for s_i in range(n_sub):
-            qs = q[s_i * sub_dim : (s_i + 1) * sub_dim]
-            for c in codebooks[s_i]:
-                # _fold_dot (not np.dot): the LUT values must be the
-                # engine-neutral left fold so a DuckDB oracle can
-                # recompute them bit-exactly (q_pq_topk_lit)
-                dlut.append(_fold_dot(qs, c))
-                nlut.append(_fold_dot(c, c))
-        lut_rows.append((int(r[id_col]), _fold_norm(q), dlut, nlut))
-    luts = spark.createDataFrame(
-        lut_rows, "query_id long, qnorm double, dlut array<double>, nlut array<double>"
-    )
-
-    idx = F.sequence(F.lit(0), F.lit(n_sub - 1))
-
-    def _gather(lut):
-        picked = F.zip_with(
-            F.col("pq_code"),
-            idx,
-            lambda c, s: F.element_at(lut, s * F.lit(n_c) + c + 1),
-        )
-        return F.aggregate(picked, F.lit(0.0), lambda a, x: a + x)
-
-    sim = _gather(F.col("dlut")) / (
-        F.col("qnorm") * F.sqrt(_gather(F.col("nlut")))
-    )
-    scored = codes.crossJoin(F.broadcast(luts)).select(
+    scored = codes.crossJoin(F.broadcast(_adc_luts(b, id_col, codebooks))).select(
         F.col("query_id"),
         F.col(id_col).alias("neighbor_id"),
-        sim.alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
+        _adc_sim(n_sub, n_c).alias("sim"),
     )
     if rerank is not None:
-        shortlist = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= rerank)
+        return _exact_rerank(
+            _top_k(scored, rerank), corpus, b.relation(), id_col, vec_col, k
         )
-        return _exact_rerank(shortlist, corpus, queries, id_col, vec_col, k)
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 def cosine_topk_ivfpq(
@@ -1070,8 +1083,6 @@ def cosine_topk_ivfpq(
     n_iters: int = 2,
     centroids: np.ndarray | None = None,
     rerank: int | None = None,
-    max_query_batch: int = DEFAULT_MAX_QUERY_BATCH,
-    allow_full_cross: bool = False,
 ) -> DataFrame:
     """IVF coarse pruning composed with PQ asymmetric-distance scoring —
     the billion-scale ANN configuration (IVFADC, Jégou et al. 2011):
@@ -1083,104 +1094,50 @@ def cosine_topk_ivfpq(
 
     Job shape: one map-only corpus pass emits (cell, pq_code) per vector
     — both the coarse assignment and the codes are plan-literal
-    expressions, no UDF. The query side is driver-sized by construction
-    (probe lists + LUTs are |Q| x n_sub x n_centroids doubles) and
+    expressions, no UDF. The query batch is fetched once
+    (:func:`_fetch_queries`, at most ``MAX_QUERY_BATCH`` queries of the
+    centroids' length, none NULL); its probe lists (:func:`_probe_cells`)
+    and lookup tables (:func:`_adc_luts`) are built on the driver and
     broadcast into the cell join.
 
     ``centroids`` (a :func:`load_centroids` artifact) skips coarse
     training; ``rerank=R`` adds the exact re-rank refinement (see
     :func:`pq_topk`) — together they are the production operating
     point: train once, per-batch cost = cell join + ADC + R-sized
-    exact re-rank.
-
-    The per-query probe lists + lookup tables are COLLECTED driver-side,
-    so the queries side is count-guarded to ``max_query_batch`` rows
-    (default 8192); a bigger batch raises unless ``allow_full_cross=True``
-    is passed explicitly."""
-    _require_bounded_queries(
-        queries, "cosine_topk_ivfpq", max_query_batch, allow_full_cross
-    )
+    exact re-rank."""
     cents = (
         centroids
         if centroids is not None
         else kmeans_centroids(corpus, id_col, vec_col, n_centroids, n_iters)
     )
     n_sub, n_c, sub_dim = codebooks.shape
-
-    c_dots = _centroid_dots(vec_col, cents)
-    code_exprs = []
-    for s_i in range(n_sub):
-        sub_sql = f"slice({vec_col}, {s_i * sub_dim + 1}, {sub_dim})"
-        scores = _pq_assign_scores(sub_sql, codebooks[s_i])
-        code_exprs.append(
-            (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
+    if n_sub * sub_dim != cents.shape[1]:
+        raise ValueError(
+            f"cosine_topk_ivfpq: codebooks cover {n_sub * sub_dim} dimensions,"
+            f" centroids {cents.shape[1]}"
         )
+    b = _fetch_queries(
+        queries, "cosine_topk_ivfpq", id_col, vec_col, cents.shape[1], nulls=False
+    )
+    c_dots = _centroid_dots(vec_col, cents)
     cb = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         (F.array_position(c_dots, F.array_max(c_dots)) - 1).alias("cell"),
-        F.array(*code_exprs).alias("pq_code"),
-    )
-
-    rows = queries.select(id_col, vec_col).collect()
-    qmat = np.array([r[vec_col] for r in rows], dtype=np.float64).reshape(
-        len(rows), cents.shape[1]
+        _pq_code(codebooks, vec_col).alias("pq_code"),
     )
     # probe lists from the engine-neutral left folds with a total order
     # (dot desc, cell asc), which an oracle twin needs
-    q_nrms, probes = _probe_cells(qmat, cents, n_probe)
-    lut_rows = []
-    for r, q, q_nrm, probe in zip(rows, qmat, q_nrms, probes):
-        dlut, nlut = [], []
-        for s_i in range(n_sub):
-            qs = q[s_i * sub_dim : (s_i + 1) * sub_dim]
-            for c in codebooks[s_i]:
-                dlut.append(_fold_dot(qs, c))
-                nlut.append(_fold_dot(c, c))
-        for cell in probe:
-            lut_rows.append((int(r[id_col]), int(cell), float(q_nrm), dlut, nlut))
-    spark = corpus.sparkSession
-    luts = spark.createDataFrame(
-        lut_rows,
-        "query_id long, cell long, qnorm double,"
-        " dlut array<double>, nlut array<double>",
-    )
-
-    idx = F.sequence(F.lit(0), F.lit(n_sub - 1))
-
-    def _gather(lut):
-        picked = F.zip_with(
-            F.col("pq_code"),
-            idx,
-            lambda c, s: F.element_at(lut, s * F.lit(n_c) + c + 1),
-        )
-        return F.aggregate(picked, F.lit(0.0), lambda a, x: a + x)
-
-    sim = _gather(F.col("dlut")) / (
-        F.col("qnorm") * F.sqrt(_gather(F.col("nlut")))
-    )
+    _, probes = _probe_cells(b.q, cents, n_probe)
     scored = (
-        cb.join(F.broadcast(luts), "cell")
+        cb.join(F.broadcast(_adc_luts(b, id_col, codebooks, probes)), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            sim.alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
+        .select("query_id", "neighbor_id", _adc_sim(n_sub, n_c).alias("sim"))
     )
     if rerank is not None:
-        shortlist = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= rerank)
+        return _exact_rerank(
+            _top_k(scored, rerank), corpus, b.relation(), id_col, vec_col, k
         )
-        return _exact_rerank(shortlist, corpus, queries, id_col, vec_col, k)
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 def semantic_dedup(
@@ -1378,8 +1335,6 @@ def hard_negatives(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    max_query_batch: int = DEFAULT_MAX_QUERY_BATCH,
-    allow_full_cross: bool = False,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the k
     most-similar corpus vectors with a DIFFERENT label — the negatives
@@ -1389,21 +1344,21 @@ def hard_negatives(
 
     Same plan as :func:`cosine_topk` — broadcast(queries) x corpus with
     a JVM cosine expression, label-inequality filter BEFORE scoring's
-    window, per-query top-k — so everything said there about scale
-    carries over; for corpus-vs-corpus mining, swap the candidate source
-    for IVF/LSH candidates and keep the label filter + window.
-
-    The queries side is BROADCAST whole, so it is count-guarded to
-    ``max_query_batch`` rows (default 8192); a bigger batch raises
-    unless ``allow_full_cross=True`` is passed explicitly."""
-    _require_bounded_queries(
-        queries, "hard_negatives", max_query_batch, allow_full_cross
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        V.norm(F.col(vec_col)).alias("q_nrm"),
-        F.col(label_col).alias("q_label"),
+    window, per-query top-k — so everything said there about scale and
+    the fetched query batch carries over; for corpus-vs-corpus mining,
+    swap the candidate source for IVF/LSH candidates and keep the label
+    filter + window."""
+    q = (
+        _fetch_queries(
+            queries, "hard_negatives", id_col, vec_col, extra=(label_col,)
+        )
+        .relation()
+        .select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("q_vec"),
+            V.norm(F.col(vec_col)).alias("q_nrm"),
+            F.col(label_col).alias("q_label"),
+        )
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -1426,14 +1381,7 @@ def hard_negatives(
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "neg_label", "rank", "sim")
-    )
+    return _top_k(scored, k, extra=("neg_label",))
 
 
 def mips_topk(
@@ -1446,8 +1394,6 @@ def mips_topk(
     n_probe: int | None = None,
     n_iters: int = 2,
     centroids: np.ndarray | None = None,
-    max_query_batch: int = DEFAULT_MAX_QUERY_BATCH,
-    allow_full_cross: bool = False,
 ) -> DataFrame:
     """Max-inner-product top-k (the recommendation/retrieval scoring
     problem: rank items by q·x, NOT by angle) via the norm-augmentation
@@ -1461,30 +1407,29 @@ def mips_topk(
     (a long vector can dominate the inner product while losing on
     angle).
 
-    ``n_centroids=None``: exact — broadcast(queries) × corpus, one JVM
-    dot per pair, per-query top-k window. With ``n_centroids``: k-means
-    cells are trained ON THE AUGMENTED vectors and each query probes its
-    ``n_probe`` nearest cells (default ``n_probe = n_centroids``: the
-    result stays provably exact while the cell equi-join already
-    replaces the cross product — the q_cosine_topk_ivf_exact precedent;
-    lower n_probe trades recall for the ~n_probe/n_centroids compare
-    fraction). Scores are always the TRUE inner products q·x computed
-    from the ORIGINAL vectors, so the readout never inherits
-    augmentation arithmetic. The only driver-side values are the 1-row
-    M² scalar and the centroid matrix. Returns
-    ``(query_id, neighbor_id, rank, ip)``; self-matches excluded.
-
-    On the exact rung (no cells) the queries side is BROADCAST whole, so
-    it is count-guarded to ``max_query_batch`` rows (default 8192); a
-    bigger batch raises unless ``allow_full_cross=True`` is passed
-    explicitly. The cell rung keeps queries distributed (probe lists are
-    plan expressions), so no guard applies there."""
+    ``n_centroids=None`` and no ``centroids``: exact — broadcast(queries)
+    × corpus, one JVM dot per pair, per-query top-k window. Otherwise
+    k-means cells are trained ON THE AUGMENTED vectors (or ``centroids``,
+    of length dim + 1, are used) and each query probes its ``n_probe``
+    nearest cells (default ``n_probe = n_centroids``: the result stays
+    provably exact while the cell equi-join already replaces the cross
+    product — the q_cosine_topk_ivf_exact precedent; lower n_probe trades
+    recall for the ~n_probe/n_centroids compare fraction). The probe
+    cells are picked on the driver as in :func:`cosine_topk_ivf`
+    (:func:`_probe_cells` on each query augmented with ``0.0``) and join
+    as a broadcast in-memory relation; M² is a scalar subquery, so the
+    plan carries no data-dependent literal but the centroids of the
+    corpus-side cell assignment. Scores are always the TRUE inner
+    products q·x computed from the ORIGINAL vectors, so the readout never
+    inherits augmentation arithmetic. On both rungs the query batch is
+    fetched once (:func:`_fetch_queries`, at most ``MAX_QUERY_BATCH``
+    queries). Returns ``(query_id, neighbor_id, rank, ip)``;
+    self-matches excluded."""
     if n_centroids is None and centroids is None:
-        _require_bounded_queries(
-            queries, "mips_topk", max_query_batch, allow_full_cross
-        )
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        q = (
+            _fetch_queries(queries, "mips_topk", id_col, vec_col)
+            .relation()
+            .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
         )
         c = corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
@@ -1498,79 +1443,42 @@ def mips_topk(
                 V.dot(F.col("q_vec"), F.col("c_vec")).alias("ip"),
             )
         )
-    else:
-        m2 = float(
-            corpus.agg(
-                F.max(V.dot(F.col(vec_col), F.col(vec_col))).alias("m2")
-            ).collect()[0]["m2"]
-        )
-
-        def _aug(df: DataFrame, extra) -> DataFrame:
-            return df.select(
-                F.col(id_col),
-                F.col(vec_col),
-                F.concat(
-                    F.transform(F.col(vec_col), lambda x: x.cast("double")),
-                    F.array(extra),
-                ).alias("__aug"),
-            )
-
-        ac = _aug(
-            corpus,
-            F.sqrt(
-                F.greatest(
-                    F.lit(0.0),
-                    F.lit(m2) - V.dot(F.col(vec_col), F.col(vec_col)),
-                )
-            ),
-        )
-        cents = (
-            centroids
-            if centroids is not None
-            else kmeans_centroids(ac, id_col, "__aug", n_centroids, n_iters)
-        )
-        n_cent = cents.shape[0]
-        probe = n_probe if n_probe is not None else n_cent
-        c_dots = _centroid_dots("__aug", cents)
-        cb = ac.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            (F.array_position(c_dots, F.array_max(c_dots)) - 1).alias("cell"),
-        )
-        aq = _aug(queries, F.lit(0.0))
-        q_dots = _centroid_dots("__aug", cents)
-        probe_cells = F.slice(
-            F.transform(
-                F.array_sort(
-                    F.transform(
-                        q_dots,
-                        lambda d, i: F.struct((-d).alias("nd"), i.alias("i")),
-                    )
-                ),
-                lambda s: s["i"],
-            ),
-            1,
-            probe,
-        )
-        qb = aq.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(probe_cells).alias("cell"),
-        )
-        scored = (
-            cb.join(qb, "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                V.dot(F.col("q_vec"), F.col("c_vec")).alias("ip"),
-            )
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ip").desc(), F.col("neighbor_id")
+        return _top_k(scored, k, score="ip")
+    norm2 = V.dot(F.col(vec_col), F.col(vec_col))
+    m2 = corpus.agg(F.max(norm2)).scalar()
+    ac = corpus.select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.concat(
+            F.transform(F.col(vec_col), lambda x: x.cast("double")),
+            F.array(F.sqrt(F.greatest(F.lit(0.0), m2 - norm2))),
+        ).alias("__aug"),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "ip")
+    cents = (
+        centroids
+        if centroids is not None
+        else kmeans_centroids(ac, id_col, "__aug", n_centroids, n_iters)
     )
+    b = _fetch_queries(queries, "mips_topk", id_col, vec_col, cents.shape[1] - 1)
+    # a query's augmented component is 0.0: its probe cells come from the
+    # same left fold over dim + 1 elements that Spark would run
+    aug = b._replace(q=np.hstack([b.q, np.zeros((len(b.q), 1))]))
+    qb, _ = _probe_relation(
+        aug, cents, id_col, vec_col, n_probe if n_probe is not None else len(cents)
+    )
+    c_dots = _centroid_dots("__aug", cents)
+    cb = ac.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        (F.array_position(c_dots, F.array_max(c_dots)) - 1).alias("cell"),
+    )
+    scored = (
+        cb.join(F.broadcast(qb), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            V.dot(F.col("q_vec"), F.col("c_vec")).alias("ip"),
+        )
+    )
+    return _top_k(scored, k, score="ip")

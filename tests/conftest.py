@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -38,3 +39,19 @@ def assert_df_equal(actual, expected, sort_by=None):
     import pandas.testing as pdt
 
     pdt.assert_frame_equal(a, e, check_dtype=False)
+
+
+def jobs_and_error(spark, build):
+    """Call ``build()`` under a fresh job group: the number of Spark jobs
+    it ran and the ValueError it raised (None if it returned)."""
+    sc = spark.sparkContext
+    group = f"build_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one build")
+    err = None
+    try:
+        build()
+    except ValueError as exc:
+        err = exc
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), err

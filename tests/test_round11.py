@@ -1,12 +1,10 @@
 """Round-11 pins.
 
-1. Query-batch guards on the similarity APIs (r10 VERDICT "What's
-   wrong" #1): the PQ/MIPS/IVFPQ lookup-table builds COLLECT the queries
-   side and the exact brute-force rungs BROADCAST it whole, so a
-   fact-sized queries DataFrame is a driver OOM. Every such entry point
-   now count-guards the queries side (``max_query_batch``, default 8192)
-   and raises unless ``allow_full_cross=True`` — the threshold_pairs
-   discipline. Canaries here prove each guard fires.
+1. Query-batch guards on the similarity APIs: the exact rungs broadcast
+   the query batch whole and the PQ/IVFPQ searches build lookup tables
+   from it on the driver, so each fetches it once under
+   ``limit(MAX_QUERY_BATCH + 1)`` and raises past the cap. Canaries here
+   prove each guard fires after that one fetch job.
 2. banded_id_pairs hardening (r10 ADVICE): exact floor-division buckets
    make negative ids correct (not silently wrong-bucketed), and the
    internal alias makes non-simple column names safe.
@@ -25,6 +23,7 @@ from pyspark.sql import functions as F
 
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.operators import (
     dedup as D,
+    similarity,
 )
 from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualization_spark.operators.dedup import (
     banded_id_pairs,
@@ -37,7 +36,7 @@ from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualiz
     pq_topk,
 )
 
-from tests.conftest import assert_df_equal
+from tests.conftest import assert_df_equal, jobs_and_error
 
 
 # ---------------------------------------------------------------------------
@@ -56,60 +55,54 @@ def vecs(spark):
     )
 
 
+@pytest.fixture
+def cap4(monkeypatch):
+    monkeypatch.setattr(similarity, "MAX_QUERY_BATCH", 4)
+
+
 BOOKS = np.arange(2 * 2 * 2, dtype=np.float64).reshape(2, 2, 2)
 
 
-def test_cosine_topk_guard_fires(vecs):
-    with pytest.raises(ValueError, match="cosine_topk.*max_query_batch"):
-        cosine_topk(vecs, vecs, k=2, max_query_batch=4)
+def _raises_after_one_job(spark, fn_name, build):
+    """``build()`` raises the query-batch cap error naming ``fn_name``
+    after exactly one Spark job, the batch fetch."""
+    jobs, err = jobs_and_error(spark, build)
+    assert jobs == 1
+    assert err is not None and _re.match(f"{fn_name}: .*MAX_QUERY_BATCH", str(err))
 
 
-def test_pq_topk_guard_fires(vecs):
-    with pytest.raises(ValueError, match="pq_topk.*max_query_batch"):
-        pq_topk(vecs, vecs, BOOKS, k=2, max_query_batch=4)
+def test_cosine_topk_guard_fires(spark, vecs, cap4):
+    _raises_after_one_job(spark, "cosine_topk", lambda: cosine_topk(vecs, vecs, k=2))
 
 
-def test_ivfpq_guard_fires(vecs):
-    with pytest.raises(ValueError, match="cosine_topk_ivfpq.*max_query_batch"):
-        cosine_topk_ivfpq(vecs, vecs, BOOKS, k=2, max_query_batch=4)
+def test_pq_topk_guard_fires(spark, vecs, cap4):
+    _raises_after_one_job(spark, "pq_topk", lambda: pq_topk(vecs, vecs, BOOKS, k=2))
 
 
-def test_mips_exact_guard_fires(vecs):
-    with pytest.raises(ValueError, match="mips_topk.*max_query_batch"):
-        mips_topk(vecs, vecs, k=2, max_query_batch=4)
-
-
-def test_hard_negatives_guard_fires(vecs):
-    with pytest.raises(ValueError, match="hard_negatives.*max_query_batch"):
-        hard_negatives(vecs, vecs, "label", k=2, max_query_batch=4)
-
-
-def test_guard_override_allows_oversize(vecs):
-    out = cosine_topk(
-        vecs, vecs, k=2, max_query_batch=4, allow_full_cross=True
+def test_ivfpq_guard_fires(spark, vecs, cap4):
+    _raises_after_one_job(
+        spark,
+        "cosine_topk_ivfpq",
+        lambda: cosine_topk_ivfpq(vecs, vecs, BOOKS, k=2, centroids=np.eye(4)),
     )
-    assert out.count() == 12 * 2
 
 
-def test_guard_under_cap_passes(vecs):
-    q = vecs.limit(3)
-    out = cosine_topk(vecs, q, k=2, max_query_batch=4)
-    assert out.count() == 3 * 2
+def test_mips_exact_guard_fires(spark, vecs, cap4):
+    _raises_after_one_job(spark, "mips_topk", lambda: mips_topk(vecs, vecs, k=2))
 
 
-def test_guard_rejects_bad_cap(vecs):
-    with pytest.raises(ValueError, match="must be positive"):
-        cosine_topk(vecs, vecs, k=2, max_query_batch=0)
-
-
-def test_mips_cell_rung_unguarded(vecs):
-    """The IVF-cell rung keeps queries distributed (probe lists are plan
-    expressions, never collected), so no guard applies there even for a
-    queries side over the cap."""
-    out = mips_topk(
-        vecs, vecs, k=2, n_centroids=2, n_iters=1, max_query_batch=4
+def test_hard_negatives_guard_fires(spark, vecs, cap4):
+    _raises_after_one_job(
+        spark, "hard_negatives", lambda: hard_negatives(vecs, vecs, "label", k=2)
     )
-    assert out.count() == 12 * 2
+
+
+def test_guard_under_cap_passes(spark, vecs, cap4):
+    """A batch at the cap builds with its one fetch job, and runs."""
+    out = []
+    q = vecs.limit(4)
+    assert jobs_and_error(spark, lambda: out.append(cosine_topk(vecs, q, k=2))) == (1, None)
+    assert out[0].count() == 4 * 2
 
 
 # ---------------------------------------------------------------------------

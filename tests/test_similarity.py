@@ -14,6 +14,8 @@ from azure_cloud_based_end_to_end_data_pipeline_development_for_etl_and_visualiz
     similarity as S,
 )
 
+from tests.conftest import jobs_and_error
+
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
@@ -123,15 +125,10 @@ def test_quantize_embeddings_range_and_error(spark, emb):
 
 
 def test_threshold_pairs_unblocked_requires_explicit_opt_in(spark, emb):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="crossJoin"):
+    """There is no unblocked (n^2 crossJoin) form: block_col=None raises
+    and points at lsh_bucket for a blocking key."""
+    with pytest.raises(ValueError, match="lsh_bucket"):
         S.threshold_pairs(emb, block_col=None)
-    # explicit opt-in still works for toy corpora
-    pairs = S.threshold_pairs(
-        emb.limit(20), block_col=None, threshold=0.3, allow_full_cross=True
-    )
-    assert pairs.columns == ["a", "b", "sim"]
 
 
 def test_pq_deterministic_and_near_dup_recall(spark, emb):
@@ -394,16 +391,16 @@ def test_pq_rerank_recall_beats_plain_adc(spark, emb):
 # ---------------------------------------------------------------------------
 
 
-def _plan_literal_probes(df, cents, n_probe):
-    """Oracle: the plan-literal probe expression the IVF query path used
-    before probes moved to the driver — centroid dots inlined as SQL
-    literals, cells ordered by ``array_sort(struct(-dot, i))``, then
-    ``slice``d to ``n_probe``."""
+def _plan_literal_probes(df, cents, n_probe, vec_col="embedding"):
+    """Oracle: the plan-literal probe expression the IVF and MIPS query
+    paths used before probes moved to the driver — centroid dots inlined
+    as SQL literals, cells ordered by ``array_sort(struct(-dot, i))``,
+    then ``slice``d to ``n_probe``."""
 
     def lit_dot(c):
         arr = "array(" + ",".join(repr(float(x)) + "D" for x in c) + ")"
         return (
-            "aggregate(zip_with(transform(embedding, x -> cast(x as double)), "
+            f"aggregate(zip_with(transform({vec_col}, x -> cast(x as double)), "
             f"{arr}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
         )
 
@@ -443,7 +440,7 @@ def test_driver_probes_equal_plan_literal_probes(spark):
         (203, [0.0] * dim),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    batch = df.toArrow()
+    batch = S._fetch_queries(df, "test", "vec_id", "embedding", dim)
     real = rng.standard_normal((12, dim))
     ints = rng.integers(-1, 2, (12, dim)).astype(float)
     for cents in (
@@ -452,7 +449,7 @@ def test_driver_probes_equal_plan_literal_probes(spark):
     ):
         for n_probe in (0, 1, 3, 14, 19):
             want = _plan_literal_probes(df, cents, n_probe)
-            qb, probed = S._probe_relation(df, batch, cents, "vec_id", "embedding", n_probe)
+            qb, probed = S._probe_relation(batch, cents, "vec_id", "embedding", n_probe)
             got = {}
             for r in qb.collect():
                 got.setdefault(r["query_id"], []).append(r["cell"])
@@ -463,7 +460,7 @@ def test_driver_probes_equal_plan_literal_probes(spark):
         r["vec_id"]: r["n"]
         for r in df.select("vec_id", S.V.norm(F.col("embedding")).alias("n")).collect()
     }
-    qb, _ = S._probe_relation(df, batch, cents, "vec_id", "embedding", 1)
+    qb, _ = S._probe_relation(batch, cents, "vec_id", "embedding", 1)
     got_norms = {r["query_id"]: r["q_nrm"] for r in qb.collect()}
     assert all(_same_double(got_norms[q], n) for q, n in norms.items()), got_norms
 
@@ -494,9 +491,9 @@ def test_ivf_query_builds_in_one_job_without_centroid_literals(spark, emb, tmp_p
 
 
 def test_ivf_query_batch_over_cap_raises_before_scoring(spark, tmp_path):
-    """DEFAULT_MAX_QUERY_BATCH + 1 queries raise after the one fetch job,
-    before anything is scored."""
-    n = S.DEFAULT_MAX_QUERY_BATCH + 1
+    """MAX_QUERY_BATCH + 1 queries raise after the one fetch job, before
+    anything is scored."""
+    n = S.MAX_QUERY_BATCH + 1
     queries = spark.range(n).select(
         F.col("id").alias("vec_id"),
         F.array(*[(F.col("id") % (j + 2)).cast("float") for j in range(4)]).alias("embedding"),
@@ -526,3 +523,122 @@ def test_ivf_index_stores_vector_norms(spark, emb, tmp_path):
     index = S.build_ivf_index(emb, cents, str(tmp_path / "idx"))
     bad = index.filter(~F.col("norm").eqNullSafe(S.V.norm(F.col("embedding")))).count()
     assert "norm" in index.columns and bad == 0
+
+
+BOOKS8 = S.seeded_codebooks(8, 4, 8, seed=3)
+SEARCHES = {
+    "cosine_topk": lambda c, q: S.cosine_topk(c, q, k=3),
+    "hard_negatives": lambda c, q: S.hard_negatives(c, q, "label", k=3),
+    "pq_topk": lambda c, q: S.pq_topk(c, q, BOOKS8, k=3),
+    "cosine_topk_ivfpq": lambda c, q: S.cosine_topk_ivfpq(
+        c, q, BOOKS8, k=3, n_probe=2, centroids=S._hyperplanes(4, 64), rerank=5
+    ),
+    "mips_topk": lambda c, q: S.mips_topk(c, q, k=3),
+    "mips_topk_cells": lambda c, q: S.mips_topk(
+        c, q, k=3, n_probe=2, centroids=S._hyperplanes(4, 65)
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SEARCHES))
+def test_search_builds_in_one_job(spark, emb, name):
+    """Building a search that holds its query batch on the driver runs
+    exactly one job, the batch fetch; the built plan then runs."""
+    queries = emb.filter(F.col("vec_id") < 4)
+    out = []
+    assert jobs_and_error(spark, lambda: out.append(SEARCHES[name](emb, queries))) == (1, None)
+    assert {r["query_id"] for r in out[0].collect()} == {0, 1, 2, 3}
+
+
+_RAGGED = [(0, [1.0, 0.0, 0.0, 0.0], 0), (1, [0.0, 1.0, 0.0], 1)]
+_SHORT = [(0, [1.0, 0.0, 0.0], 0), (1, [0.0, 1.0, 0.0], 1)]
+_NULL_VEC = [(0, [1.0, 0.0, 0.0, 0.0], 0), (1, None, 1)]
+_NULL_ELEM = [(0, [1.0, 0.0, None, 0.0], 0)]
+_BOOKS = S.seeded_codebooks(2, 2, 2)
+_CASES = {
+    "cosine_topk-ragged": (_RAGGED, lambda q: S.cosine_topk(q, q, k=1)),
+    "hard_negatives-ragged": (_RAGGED, lambda q: S.hard_negatives(q, q, "label", k=1)),
+    "mips_topk-ragged": (_RAGGED, lambda q: S.mips_topk(q, q, k=1)),
+    "cosine_topk_ivf-short": (_SHORT, lambda q: S.cosine_topk_ivf(q, q, k=1, centroids=np.eye(4))),
+    "pq_topk-short": (_SHORT, lambda q: S.pq_topk(q, q, _BOOKS, k=1)),
+    "cosine_topk_ivfpq-short": (
+        _SHORT,
+        lambda q: S.cosine_topk_ivfpq(q, q, _BOOKS, k=1, centroids=np.eye(4)),
+    ),
+    "mips_topk-short": (_SHORT, lambda q: S.mips_topk(q, q, k=1, centroids=np.eye(5))),
+    "pq_topk-null_vec": (_NULL_VEC, lambda q: S.pq_topk(q, q, _BOOKS, k=1)),
+    "pq_topk-null_elem": (_NULL_ELEM, lambda q: S.pq_topk(q, q, _BOOKS, k=1)),
+    "cosine_topk_ivfpq-null_vec": (
+        _NULL_VEC,
+        lambda q: S.cosine_topk_ivfpq(q, q, _BOOKS, k=1, centroids=np.eye(4)),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_query_batch_input_checks(spark, case):
+    """A query vector of the wrong length (against the centroids or
+    codebooks, or against the rest of the batch) raises a ValueError
+    naming the function, and so does a NULL vector or element for the
+    PQ searches — after the one fetch job, before anything is scored."""
+    rows, search = _CASES[case]
+    queries = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    jobs, err = jobs_and_error(spark, lambda: search(queries))
+    assert jobs == 1
+    assert err is not None and str(err).startswith(case.split("-")[0] + ": query vectors must")
+
+
+def test_mips_driver_probes_equal_plan_literal_probes(spark, monkeypatch):
+    """mips_topk's cell rung probes, per query, the cells that its former
+    plan-literal expression picked for the query augmented with 0.0: the
+    probe lists it builds equal that expression's, and with k past the
+    corpus size its output pairs are exactly the non-self corpus rows in
+    those cells. Covers random vectors of varied norms, exact integer
+    ties, duplicated centroids, a NULL query and partial to full probe."""
+    built = []
+
+    def recording_probe_relation(*args):
+        qb, probed = real_probe_relation(*args)
+        built.append(qb)
+        return qb, probed
+
+    real_probe_relation = S._probe_relation
+    monkeypatch.setattr(S, "_probe_relation", recording_probe_relation)
+    rng = np.random.default_rng(9)
+    dim = 6
+    rows = [(i, (rng.standard_normal(dim) * rng.uniform(0.5, 3)).tolist()) for i in range(40)]
+    rows += [(100 + i, rng.integers(-2, 3, dim).astype(float).tolist()) for i in range(20)]
+    schema = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame(rows, schema)
+    queries = spark.createDataFrame(rows[:40:5] + rows[40::3] + [(999, None)], schema)
+
+    e = F.col("embedding")
+    m2 = corpus.agg(F.max(S.V.dot(e, e))).collect()[0][0]
+
+    def aug(df, extra):
+        return df.select(
+            "vec_id",
+            F.concat(F.transform(e, lambda x: x.cast("double")), F.array(extra)).alias("__aug"),
+        )
+
+    aug_corpus = aug(corpus, F.sqrt(F.greatest(F.lit(0.0), F.lit(m2) - S.V.dot(e, e))))
+    aug_queries = aug(queries, F.lit(0.0))
+    real = rng.standard_normal((10, dim + 1))
+    ints = rng.integers(-1, 2, (10, dim + 1)).astype(float)
+    for cents in (np.vstack([real, real[[2, 5]]]), np.vstack([ints, ints[[0]]])):
+        cells = {q: p[0] for q, p in _plan_literal_probes(aug_corpus, cents, 1, "__aug").items()}
+        sizes = []
+        for n_probe in (1, 3, len(cents)):
+            probes = _plan_literal_probes(aug_queries, cents, n_probe, "__aug")
+            want = {
+                (q, c) for q, p in probes.items() for c, cell in cells.items() if cell in p and c != q
+            }
+            got = S.mips_topk(corpus, queries, k=len(rows), n_probe=n_probe, centroids=cents)
+            got_probes = {}
+            for r in built.pop().collect():
+                got_probes.setdefault(r["query_id"], []).append(r["cell"])
+            assert got_probes == probes, n_probe
+            assert {(r["query_id"], r["neighbor_id"]) for r in got.collect()} == want, n_probe
+            sizes.append(len(want))
+        assert sizes[0] < sizes[1] < sizes[2]
+    assert probes[999] == list(range(len(cents)))

@@ -22,15 +22,12 @@ registry can't accumulate dead rows.
 
 Every registered site's bound, by class:
 
-- **scalar**: 1-row aggregates (HWM max-ts, corpus max-norm M²);
+- **scalar**: 1-row aggregates (HWM max-ts, global min/max);
 - **k-sized**: k-means centroid matrices, PQ codebooks, per-merge-round
   argmax rows — bounded by a model-size parameter, never by rows;
-- **query-batch**: a query batch held on the driver, in one of two forms:
-  count-then-collect (the PQ/IVFPQ/MIPS lookup-table builds, where
-  ``_require_bounded_queries`` counts under ``limit(max_query_batch + 1)``,
-  default 8192, BEFORE the collect runs) or fetch-then-check (the IVF
-  probe batch, fetched under ``limit(DEFAULT_MAX_QUERY_BATCH + 1)`` and
-  raised past the cap);
+- **query-batch**: a search's query batch held on the driver. Every
+  search fetches it at one site, ``similarity._fetch_queries``, under
+  ``limit(MAX_QUERY_BATCH + 1)`` (8192 + 1), and raises past the cap;
 - **domain-bounded**: histograms over value domains (price cents);
 - **batch-bounded**: an incremental batch held on the driver, capped by
   ``plans.medallion.DRIVER_BATCH_ROWS`` before the rest of it is fetched.
@@ -130,24 +127,10 @@ REGISTRY: dict[tuple[str, str], tuple[int, str]] = {
         "k-sized: sampled seed rows (limit k) + per-subspace centroid "
         "matrices",
     ),
-    ("operators/similarity.py", "pq_topk"): (
+    ("operators/similarity.py", "_fetch_queries"): (
         1,
-        "query-batch: LUT build over queries, capped by "
-        "max_query_batch via _require_bounded_queries before the collect",
-    ),
-    ("operators/similarity.py", "cosine_topk_ivf"): (
-        1,
-        "query-batch: fetched under limit(DEFAULT_MAX_QUERY_BATCH + 1), "
-        "raised past the cap",
-    ),
-    ("operators/similarity.py", "cosine_topk_ivfpq"): (
-        1,
-        "query-batch: probe-list + LUT build over queries, capped by "
-        "max_query_batch via _require_bounded_queries before the collect",
-    ),
-    ("operators/similarity.py", "mips_topk"): (
-        1,
-        "scalar: 1-row max corpus norm M^2 (the augmentation constant)",
+        "query-batch: the search query batch, fetched under "
+        "limit(MAX_QUERY_BATCH + 1) and raised past the cap",
     ),
 }
 
